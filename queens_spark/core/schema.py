@@ -84,8 +84,10 @@ class CollectionSchema:
         return df.select(*cols)
 
     def validate(self, df: DataFrame, key_columns: list[str] | None = None) -> None:
-        """Enforce nullability and key uniqueness in ONE distributed pass
-        each (no driver-side iteration over rows).
+        """Enforce nullability and key uniqueness in ONE distributed
+        aggregate (no driver-side iteration over rows): per-key row and
+        non-null counts, rolled up to the totals and the largest key
+        group.
 
         - nullability: any null in a non-nullable column fails
           (queens/etl/validation.py:143-147);
@@ -100,30 +102,33 @@ class CollectionSchema:
                     if not c.nullable and c.name in df.columns]
         real_cols = [c.name for c in self.columns.values()
                      if c.sql_type == "REAL" and c.name in df.columns]
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        aggs += [F.count(c).alias(f"__nn_{c}") for c in set(non_null) | set(real_cols)]
-        row = df.agg(*aggs).collect()[0].asDict()
-        total = row["__n"]
+        counted = sorted(set(non_null) | set(real_cols))
+        per_key = [F.count(F.lit(1)).alias("__n")]
+        per_key += [F.count(c).alias(f"__nn_{c}") for c in counted]
+        if key_columns:
+            df = df.groupBy(*key_columns).agg(*per_key)
+            totals = [F.sum("__n").alias("__n"), F.max("__n").alias("__dup")]
+            totals += [F.sum(f"__nn_{c}").alias(f"__nn_{c}") for c in counted]
+            row = df.agg(*totals).collect()[0].asDict()
+        else:
+            row = df.agg(*per_key).collect()[0].asDict()
+        total = row["__n"] or 0
         for c in non_null:
-            if row[f"__nn_{c}"] != total:
+            nn = row[f"__nn_{c}"] or 0
+            if nn != total:
                 raise SchemaValidationError(
                     f"non-nullable column '{c}' contains nulls "
-                    f"({total - row[f'__nn_{c}']} of {total} rows)"
+                    f"({total - nn} of {total} rows)"
                 )
         for c in real_cols:
-            if total > 0 and row[f"__nn_{c}"] == 0:
+            if total > 0 and not row[f"__nn_{c}"]:
                 raise SchemaValidationError(
                     f"column '{c}' is entirely null after numeric coercion"
                 )
-        if key_columns:
-            dup = (
-                df.groupBy(*key_columns).count()
-                .where(F.col("count") > 1).limit(1).count()
+        if (row.get("__dup") or 0) > 1:
+            raise SchemaValidationError(
+                f"duplicate rows for key {key_columns}"
             )
-            if dup:
-                raise SchemaValidationError(
-                    f"duplicate rows for key {key_columns}"
-                )
 
 
 # ------------------------------------------------------------ canonical

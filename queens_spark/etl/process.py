@@ -126,20 +126,14 @@ def initialize(engine: Engine, collections: list[str] | None = None) -> bool:
     queens/etl/bootstrap.py:8-44). Creates the per-collection system
     stores (empty, typed ingest log + metadata) so catalog probes work
     before any ingest. Returns True if anything was created."""
-    from queens_spark.store.warehouse import LOG_SCHEMA, META_SCHEMA
-
     created = False
     for collection in collections or list(engine.schemas):
         wh = engine.warehouse
         if not wh._exists(wh.log_path(collection)):
-            engine.spark.createDataFrame([], LOG_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(wh.log_path(collection))
+            wh._append_log(collection, [])
             created = True
         if not wh._exists(wh.meta_path(collection)):
-            engine.spark.createDataFrame([], META_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(wh.meta_path(collection))
+            wh._write_metadata(collection, [])
             created = True
     return created
 

@@ -729,6 +729,13 @@ def double_dot(a: Column, b: Column) -> Column:
     )
 
 
+def _one_seed_source(centroid_ids, centroids_pred) -> None:
+    """Seeds come from exactly one of the two arguments: given both,
+    which rows train the quantizer would be a silent choice."""
+    if centroid_ids is not None and centroids_pred is not None:
+        raise ValueError("pass centroid_ids or centroids_pred, not both")
+
+
 def kmeans_refine(
     df: DataFrame,
     vec_col: str,
@@ -761,6 +768,7 @@ def kmeans_refine(
     collecting the ids first costs a corpus scan at plan build plus an
     ``isin()`` literal that grows with the corpus.
     """
+    _one_seed_source(centroid_ids, centroids_pred)
     if centroids_pred is not None:
         cents_df = coarse_centroids(df, vec_col, id_col, centroids_pred)
         assigned0 = ivf_assign(
@@ -1021,6 +1029,7 @@ def train_coarse_centroids(
 
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
+    _one_seed_source(centroid_ids, centroids_pred)
     if centroids_pred is not None:
         seed_filter = centroids_pred
     elif centroid_ids is not None:

@@ -237,11 +237,14 @@ def _barrier(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
             size = _os.path.getsize(path)
     except OSError:
         size = 0
-    threshold = int(
-        _os.environ.get(
-            "QS_BARRIER_MIN_SRC_BYTES", str(_BARRIER_MIN_SRC_BYTES)
+    try:
+        threshold = int(
+            _os.environ.get(
+                "QS_BARRIER_MIN_SRC_BYTES", str(_BARRIER_MIN_SRC_BYTES)
+            )
         )
-    )
+    except ValueError:  # suffixed form like "256m"
+        threshold = _BARRIER_MIN_SRC_BYTES
     if size >= threshold:
         from queens_spark.operators.dedup import _persist
 

@@ -115,7 +115,9 @@ def read_workbook_xlsx(file_path: str) -> dict[str, pd.DataFrame]:
                 [rows.get(r, {}).get(c) for c in range(max_col + 1)]
                 for r in range(n_rows)
             ]
-            out[name] = pd.DataFrame(data)
+            # object columns keep each cell's own type: a numeric column
+            # would upcast a year header 2010 over float cells to 2010.0
+            out[name] = pd.DataFrame(data, dtype=object)
     return out
 
 

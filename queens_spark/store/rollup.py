@@ -145,27 +145,9 @@ def _winner_ingests(warehouse, collection: str, as_of=None) -> list[dict]:
     """(table_name, ingest_id) staging winners — the same
     latest-successful-version rule Warehouse.stage applies, over the
     tiny resolved log."""
-    from datetime import datetime
-
-    from pyspark.sql import Window
-
-    from queens_spark.store.warehouse import _utcnow
-
-    if isinstance(as_of, str):
-        as_of = datetime.strptime(as_of, "%Y-%m-%d")
-    cutoff = as_of or _utcnow()
-    log = warehouse.read_log(collection).where(
-        (F.col("success") == 1) & (F.col("ingest_ts") <= F.lit(cutoff))
-    )
-    w = Window.partitionBy("table_name").orderBy(
-        F.desc("ingest_ts"), F.desc("ingest_id")
-    )
     return [
-        {"table_name": r["table_name"], "ingest_id": int(r["ingest_id"])}
-        for r in log.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") == 1)
-        .select("table_name", "ingest_id")
-        .collect()
+        {"table_name": t, "ingest_id": int(r["ingest_id"])}
+        for t, r in warehouse.winners(collection, as_of).items()
     ]
 
 

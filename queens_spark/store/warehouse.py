@@ -11,10 +11,30 @@ Layout (under one warehouse root):
     system/{collection}/ingest_log/   version store (append-only)
     system/{collection}/metadata/     per-table column catalog
 
+Spark reads and writes the fact data only. The two system tables are a
+handful of rows per ingest, so the driver reads and writes them with
+pyarrow and no Spark job (a Spark write of a one-row file cost about a
+second, a Spark ``max`` over the log half a second):
+
+- ``ingest_log/`` holds one parquet file per log append, named
+  ``{ingest_id:012d}-{success}.parquet`` (``000000000000-empty.parquet``
+  for the empty log ``etl.process.initialize`` creates). Each file is
+  written as ``.{name}.tmp`` and ``os.replace``d into place, so readers
+  never see a partial file.
+- ``metadata/`` holds the whole catalog in one file,
+  ``catalog.parquet``, replaced the same way on every refresh.
+- Logs and catalogs Spark wrote before this layout still read: every
+  visible ``*.parquet`` file counts. Spark stored ``ingest_ts`` as
+  INT96, which pyarrow reads as ``timestamp[ns]``; the driver writes
+  ``timestamp[us, tz=UTC]``. A whole-directory pyarrow read fails on
+  that mix, so each file is read on its own and cast to the driver
+  schema. A legacy catalog is superseded by the first
+  ``catalog.parquet`` written beside it.
+
 Parity map (file:line into /root/reference/):
 - ingest + provenance flip-flag:      queens/core/read_write.py:267-337
 - raw→prod snapshot CTAS:             queens/core/read_write.py:340-404
-  (re-expressed as a window rank over the ingest log — SURVEY.md S6/W3)
+  (winners picked on the driver from the resolved log — SURVEY.md S6/W3)
 - metadata build:                     queens/core/read_write.py:464-531
   (re-expressed as ONE distributed agg pass, not per-column pandas)
 - bootstrap / table_exists:           queens/etl/bootstrap.py:8-55
@@ -22,8 +42,8 @@ Parity map (file:line into /root/reference/):
 Design for scale: raw and prod are partitioned by the logical-table
 discriminator so every query's forced ``table_name = ?`` predicate
 prunes to one partition; appends are new parquet files (no
-read-modify-write of data); the ingest log and metadata tables are
-tiny and always broadcast when joined against fact data.
+read-modify-write of data); the ingest log and metadata tables hold
+one row per ingest and per (table, column), so they stay driver-sized.
 """
 
 from __future__ import annotations
@@ -34,7 +54,10 @@ import shutil
 import urllib.parse
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from queens_spark.core.errors import StagingError
 from queens_spark.core.schema import CollectionSchema, key_columns
@@ -64,8 +87,66 @@ META_SCHEMA = T.StructType(
 )
 
 
+#: the driver-side file schemas of the two system tables
+_LOG_ARROW = to_arrow_schema(LOG_SCHEMA)
+_META_ARROW = to_arrow_schema(META_SCHEMA)
+_CATALOG_FILE = "catalog.parquet"
+#: Spark's own datetime <-> epoch-microsecond rule (naive datetimes are
+#: local time), so driver-written ``ingest_ts`` values and ``as_of``
+#: cutoffs compare exactly as the Spark-written log did
+_TS = T.TimestampType()
+
+
 def _utcnow() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
+def _cutoff(as_of: datetime | str | None) -> datetime:
+    """A staging cutoff: a datetime, a ``YYYY-MM-DD`` string, or now."""
+    if isinstance(as_of, str):
+        return datetime.strptime(as_of, "%Y-%m-%d")
+    return as_of or _utcnow()
+
+
+def _parquet_files(path: str) -> list[str]:
+    """Visible parquet files of a system-table dir (tmp files are
+    dot-prefixed; Spark's ``_SUCCESS`` and ``.crc`` files are skipped)."""
+    try:
+        names = os.listdir(path)
+    except OSError:
+        return []
+    return sorted(
+        os.path.join(path, n) for n in names
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    )
+
+
+def _read_rows(files: list[str], schema: pa.Schema) -> list[dict]:
+    """Rows of *files*, each read on its own and cast to *schema*
+    (legacy INT96 ``timestamp[ns]`` and driver ``timestamp[us, UTC]``
+    files cannot be read as one dataset). Timestamps come back as
+    epoch microseconds."""
+    rows = []
+    for f in files:
+        t = pq.ParquetFile(f).read().select(schema.names).cast(schema)
+        for i, field in enumerate(schema):
+            if pa.types.is_timestamp(field.type):
+                t = t.set_column(i, field.name, t.column(i).cast(pa.int64()))
+        rows.extend(t.to_pylist())
+    return rows
+
+
+def _write_rows(path: str, name: str, rows: list[dict], schema: pa.Schema) -> None:
+    """Write *rows* (timestamps as epoch microseconds) as the single
+    parquet file *path*/*name*: a dot-prefixed tmp file first, then
+    ``os.replace``, so no reader ever sees a partial file. Readers
+    take whole files and cast them to the schema, so neither the
+    Arrow schema nor column statistics are stored."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp,
+                   store_schema=False, write_statistics=False)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def with_row_uid(staged: DataFrame, order_cols: list[str]) -> DataFrame:
@@ -191,40 +272,93 @@ class Warehouse:
         self._prod_frame_cache[collection] = (token, df)
         return df
 
-    def read_log(self, collection: str) -> DataFrame:
-        """Resolved ingest log: one row per ingest_id with its final
-        success state. The log dir is append-only (a success=0 marker
+    def log_rows(self, collection: str) -> list[dict]:
+        """Resolved ingest log, read on the driver: one row per
+        ingest_id with its final success state (``ingest_ts`` as epoch
+        microseconds). The log dir is append-only (a success=0 marker
         row is written before the data, a success=1 row after —
         queens/core/read_write.py:300-332); resolution keeps the max
         success per ingest_id, so an ingest that died mid-write stays
         success=0 and is invisible to staging."""
-        if not self._exists(self.log_path(collection)):
-            return self.spark.createDataFrame([], LOG_SCHEMA)
-        raw = self.spark.read.schema(LOG_SCHEMA).parquet(self.log_path(collection))
-        w = Window.partitionBy("ingest_id").orderBy(F.desc("success"))
-        return (
-            raw.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") == 1)
-            .drop("__rk")
+        resolved: dict[int, dict] = {}
+        for r in _read_rows(_parquet_files(self.log_path(collection)), _LOG_ARROW):
+            prev = resolved.get(r["ingest_id"])
+            if prev is None or r["success"] > prev["success"]:
+                resolved[r["ingest_id"]] = r
+        return [resolved[i] for i in sorted(resolved)]
+
+    def _frame(self, rows: list[dict], schema: T.StructType) -> DataFrame:
+        """Spark frame over driver rows. Built from pandas through
+        Arrow, it is a local relation: no Python worker, and no Spark
+        job until something reads it."""
+        return self.spark.createDataFrame(
+            pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+            .to_pandas(),
+            schema,
         )
 
+    def read_log(self, collection: str) -> DataFrame:
+        """The resolved ingest log (:meth:`log_rows`) as a Spark frame."""
+        return self._frame(self.log_rows(collection), LOG_SCHEMA)
+
+    def metadata_rows(self, collection: str) -> list[dict]:
+        """The metadata catalog, read on the driver. A driver-written
+        ``catalog.parquet`` supersedes any legacy Spark part files
+        still beside it (a refresh that died before removing them)."""
+        files = _parquet_files(self.meta_path(collection))
+        catalog = os.path.join(self.meta_path(collection), _CATALOG_FILE)
+        return _read_rows([catalog] if catalog in files else files, _META_ARROW)
+
     def read_metadata(self, collection: str) -> DataFrame:
-        if not self._exists(self.meta_path(collection)):
-            return self.spark.createDataFrame([], META_SCHEMA)
-        return self.spark.read.schema(META_SCHEMA).parquet(self.meta_path(collection))
+        return self._frame(self.metadata_rows(collection), META_SCHEMA)
+
+    def _write_metadata(self, collection: str, rows: list[dict]) -> None:
+        """Replace the whole catalog with *rows*, then drop any legacy
+        Spark part files the new ``catalog.parquet`` supersedes."""
+        out = self.meta_path(collection)
+        _write_rows(out, _CATALOG_FILE, rows, _META_ARROW)
+        for f in _parquet_files(out):
+            if os.path.basename(f) != _CATALOG_FILE:
+                os.remove(f)
+
+    def winners(
+        self, collection: str, as_of: datetime | str | None = None
+    ) -> dict[str, dict]:
+        """Staging winners from the resolved log: per table_name the
+        latest ``(ingest_ts, ingest_id)`` with success=1 and
+        ``ingest_ts ≤ as_of`` (default: now)."""
+        cutoff = _TS.toInternal(_cutoff(as_of))
+        out: dict[str, dict] = {}
+        for r in self.log_rows(collection):
+            if (r["success"] != 1 or r["ingest_ts"] > cutoff
+                    or r["data_collection"] != collection):
+                continue
+            prev = out.get(r["table_name"])
+            if prev is None or (r["ingest_ts"], r["ingest_id"]) > (
+                prev["ingest_ts"], prev["ingest_id"]
+            ):
+                out[r["table_name"]] = r
+        return out
 
     # ----------------------------------------------------------- ingest
 
     def next_ingest_id(self, collection: str) -> int:
-        log = self.read_log(collection)
-        row = log.agg(F.max("ingest_id").alias("m")).collect()[0]
-        return int(row["m"] or 0) + 1
+        """One past the largest logged id, success=0 markers included,
+        so an id that crashed mid-write is never reused."""
+        ids = [r["ingest_id"] for r in self.log_rows(collection)]
+        return max(ids, default=0) + 1
 
     def _append_log(self, collection: str, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [tuple(r[f.name] for f in LOG_SCHEMA.fields) for r in rows], LOG_SCHEMA
+        """Append *rows* (``ingest_ts`` a datetime) as one new log file."""
+        name = (
+            f"{rows[0]['ingest_id']:012d}-{rows[0]['success']}.parquet"
+            if rows else f"{0:012d}-empty.parquet"
         )
-        df.coalesce(1).write.mode("append").parquet(self.log_path(collection))
+        _write_rows(
+            self.log_path(collection), name,
+            [dict(r, ingest_ts=_TS.toInternal(r["ingest_ts"])) for r in rows],
+            _LOG_ARROW,
+        )
 
     def ingest_frame(
         self,
@@ -308,13 +442,16 @@ class Warehouse:
     ) -> list[str]:
         """Bring the prod snapshot to the latest successful version of
         each table_name with ingest_ts ≤ *as_of* (queens/core/
-        read_write.py:340-404), then refresh metadata. Returns staged
-        table names.
+        read_write.py:340-404), then refresh metadata.
 
-        Spark-first: the reference's `MAX(ingest_ts) GROUP BY
-        table_name` CTE + double join collapses to one window rank over
-        the (tiny) ingest log, then a broadcast join of raw against the
-        winning ingest_ids.
+        The reference's `MAX(ingest_ts) GROUP BY table_name` CTE +
+        double join collapses to a driver-side pick over the resolved
+        log (:meth:`winners`); raw is then filtered to the winning
+        ingest_ids, whose timestamps and descriptions ride in as
+        literals. Returns the table names of the manifest it writes,
+        and pre-fills the ``queryable_columns`` and
+        ``table_description`` memos, so the first page after a stage
+        runs one Spark job.
 
         INCREMENTAL: a staged manifest records which winner ingest_id
         each prod table reflects, so a re-stage rewrites ONLY the
@@ -343,31 +480,12 @@ class Warehouse:
         raw probe); untouched tables stay byte-identical.
         """
         collection = schema.name
-        if isinstance(as_of, str):
-            as_of = datetime.strptime(as_of, "%Y-%m-%d")
-        cutoff = as_of or _utcnow()
-
-        log = self.read_log(collection).where(
-            (F.col("success") == 1)
-            & (F.col("ingest_ts") <= F.lit(cutoff))
-            & (F.col("data_collection") == collection)
-        )
-        w = Window.partitionBy("table_name").orderBy(
-            F.desc("ingest_ts"), F.desc("ingest_id")
-        )
-        # the resolved log is tiny (one row per ingest) — collecting the
-        # winner set lets the driver diff it against the manifest
-        winner_rows = (
-            log.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") == 1)
-            .select("table_name", "ingest_id", "ingest_ts", "table_description")
-            .collect()
-        )
-        if not winner_rows:
+        cutoff = _cutoff(as_of)
+        winners = self.winners(collection, cutoff)
+        if not winners:
             raise StagingError(
                 f"no successful ingests for '{collection}' at cutoff {cutoff}"
             )
-        winners = {r["table_name"]: r for r in winner_rows}
 
         out = self.prod_path(collection)
         manifest = self._read_manifest(collection) if self._exists(out) else None
@@ -400,24 +518,31 @@ class Warehouse:
             return sorted(winners)
 
         raw = self.read_raw(collection)
-        win_df = self.spark.createDataFrame(
-            [
-                (
-                    r["ingest_id"], r["ingest_ts"], r["table_description"],
-                )
-                for t, r in winners.items() if t in set(changed)
-            ],
-            T.StructType([
-                T.StructField("ingest_id", T.LongType(), False),
-                T.StructField("ingest_ts", T.TimestampType(), False),
-                T.StructField("table_description", T.StringType(), True),
-            ]),
-        )
         if incremental:
             # partition pruning: unchanged table_name partitions of raw
             # are never even read
             raw = raw.where(F.col("table_name").isin(changed))
-        staged = raw.join(F.broadcast(win_df), "ingest_id", "inner")
+        # the winners ride into the plan as literals: a filter on their
+        # ids plus id -> ingest_ts / description map lookups (joining a
+        # frame built from a Python list would start a Python worker)
+        wins = [winners[t] for t in changed]
+
+        def by_id(value, dtype: str):
+            pairs = [x for w in wins for x in (F.lit(w["ingest_id"]), value(w))]
+            return F.create_map(*pairs).cast(f"map<bigint,{dtype}>")[
+                F.col("ingest_id")
+            ]
+
+        staged = raw.where(
+            F.col("ingest_id").isin([w["ingest_id"] for w in wins])
+        ).select(
+            "ingest_id",
+            *[c for c in raw.columns if c != "ingest_id"],
+            by_id(lambda w: F.timestamp_micros(F.lit(w["ingest_ts"])),
+                  "timestamp").alias("ingest_ts"),
+            by_id(lambda w: F.lit(w["table_description"]),
+                  "string").alias("table_description"),
+        )
         retired = (takedown or {}).get("frame")
         if retired is not None and (takedown or {}).get("id_col") in staged.columns:
             # coverage-scoped survivor filter: a retired id's rows die
@@ -492,13 +617,20 @@ class Warehouse:
             }
 
         self._invalidate_caches(collection)
-        tables = self.refresh_metadata(
+        self.refresh_metadata(
             schema,
             tables=changed if incremental else None,
             removed=removed,
         )
         self._write_manifest(collection, new_tables, takedown_seq=td_seq)
-        return tables
+        # every staged row carries its winner's description, so the
+        # first page after this stage needs no probe job for it
+        token = self._snapshot_token(out)
+        for t in new_tables:
+            self._description_cache[(collection, t)] = (
+                token, winners[t]["table_description"]
+            )
+        return sorted(new_tables)
 
     def purge_rows(
         self,
@@ -669,16 +801,19 @@ class Warehouse:
         removed: list[str] | None = None,
     ) -> list[str]:
         """Rebuild the per-(table_name, column) catalog in ONE pass over
-        prod: count + approx-free exact distinct per column, unpivoted
-        to long, keeping only populated columns (all-null columns are
-        absent → not queryable, queens/etl/validation.py:218-220).
+        prod: count + approx-free exact distinct per column, collected
+        per table and unpivoted to long on the driver, keeping only
+        populated columns (all-null columns are absent → not
+        queryable, queens/etl/validation.py:218-220). The catalog is
+        written by the driver (see the module docstring).
 
         With *tables* given, the stats pass scans ONLY those tables'
         prod partitions (partition pruning) and merges into the
-        existing catalog — the per-table stats are an independent
-        groupBy(table_name) aggregate, so the merged catalog is
-        row-identical to a full rebuild. *removed* tables' rows are
-        dropped. This keeps stage() O(changed data) end to end."""
+        existing catalog on the driver — the per-table stats are an
+        independent groupBy(table_name) aggregate, so the merged
+        catalog is row-identical to a full rebuild. *removed* tables'
+        rows are dropped. This keeps stage() O(changed data) end to
+        end. Returns the catalogued table names."""
         collection = schema.name
         prod = self.read_prod(collection)
         if tables is not None:
@@ -689,64 +824,46 @@ class Warehouse:
         for c in cols:
             aggs.append(F.count(F.col(c)).alias(f"nn__{c}"))
             aggs.append(F.countDistinct(F.col(c)).alias(f"nu__{c}"))
-        wide = prod.groupBy("table_name").agg(*aggs)
-        pairs = []
-        for c in cols:
-            dtype = (schema.sql_type_of(c) if c in schema.columns else "INTEGER")
-            pairs.append(
-                F.struct(
-                    F.lit(c).alias("column_name"),
-                    F.col(f"nn__{c}").alias("n_non_nulls"),
-                    F.col(f"nu__{c}").alias("n_unique"),
-                    F.lit(dtype).alias("dtype"),
-                )
-            )
-        meta = (
-            wide.select(
-                "table_name",
-                F.explode(F.array(*pairs)).alias("s"),
-            )
-            .select(
-                F.lit(collection).alias("data_collection"),
-                "table_name",
-                F.col("s.column_name"),
-                F.col("s.n_non_nulls"),
-                F.col("s.n_unique"),
-                F.col("s.dtype"),
-            )
-            .where(F.col("n_non_nulls") > 0)
-        )
-        if tables is not None:
-            stale = list(tables) + list(removed or [])
-            keep = self.read_metadata(collection).where(
-                ~F.col("table_name").isin(stale)
-            )
-            # the union plan reads the OLD catalog files lazily during
-            # the tmp write below — safe, the swap happens only after
-            meta = keep.unionByName(meta)
-        out = self.meta_path(collection)
-        tmp = out + "__tmp"
-        meta.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(out):
-            shutil.rmtree(out)
-        os.replace(tmp, out)
-        return [
-            r["table_name"]
-            for r in self.read_metadata(collection)
-            .select("table_name").distinct().orderBy("table_name").collect()
+        dtypes = {
+            c: schema.sql_type_of(c) if c in schema.columns else "INTEGER"
+            for c in cols
+        }
+        fresh = [
+            {
+                "data_collection": collection, "table_name": w["table_name"],
+                "column_name": c, "n_non_nulls": w[f"nn__{c}"],
+                "n_unique": w[f"nu__{c}"], "dtype": dtypes[c],
+            }
+            for w in prod.groupBy("table_name").agg(*aggs).collect()
+            for c in cols if w[f"nn__{c}"] > 0
         ]
+        if tables is not None:
+            stale = set(tables) | set(removed or ())
+            fresh = [
+                r for r in self.metadata_rows(collection)
+                if r["table_name"] not in stale
+            ] + fresh
+        self._write_metadata(collection, fresh)
+        # the catalog just written answers every queryable_columns probe
+        token = self._snapshot_token(self.meta_path(collection))
+        by_table: dict[str, set[str]] = {}
+        for r in fresh:
+            by_table.setdefault(r["table_name"], set()).add(r["column_name"])
+        for t, names in by_table.items():
+            self._queryable_cache[(collection, t)] = (token, names)
+        return sorted(by_table)
 
     def queryable_columns(self, collection: str, table_name: str) -> set[str]:
         """Populated-column set for one staged table, memoized per
-        metadata snapshot so repeated pages never re-run the probe job."""
+        metadata snapshot so repeated pages never re-read the catalog."""
         token = self._snapshot_token(self.meta_path(collection))
         cached = self._queryable_cache.get((collection, table_name))
         if cached is not None and cached[0] == token:
             return cached[1]
-        meta = self.read_metadata(collection).where(
-            F.col("table_name") == table_name
-        )
-        cols = {r["column_name"] for r in meta.select("column_name").collect()}
+        cols = {
+            r["column_name"] for r in self.metadata_rows(collection)
+            if r["table_name"] == table_name
+        }
         self._queryable_cache[(collection, table_name)] = (token, cols)
         return cols
 

@@ -95,6 +95,29 @@ def test_process_sheet_template_path(spark):
     assert {r["group"] for r in rows} == {"Supply"}
 
 
+def test_xlsx_numeric_year_header_melts(tmp_path, spark):
+    """Real DUKES workbooks carry numeric year headers. Over a column of
+    float cells the header must read back as 2019, not 2019.0, or the
+    melted year cannot be typed."""
+    from queens_spark.sources.xlsx_lite import (
+        read_workbook_xlsx,
+        write_workbook_xlsx,
+    )
+
+    rows = raw_sheet().values.tolist()
+    rows[2] = ["rowhdr", 2019, 2020]
+    path = str(tmp_path / "numeric_header.xlsx")
+    write_workbook_xlsx(path, {"1.1": pd.DataFrame(rows, dtype=object)},
+                        header=False)
+    wrangled = wrangle_workbook(read_workbook_xlsx(path))["1.1"]
+    assert list(wrangled.columns) == ["rowhdr", "2019", "2020"]
+    out = process_sheet(spark, wrangled, template=template_df(spark),
+                        var_to_melt="year")
+    d = {(r["label"], r["year"]): r["value"] for r in out.collect()}
+    assert d[("Production", "2019")] == "1.0"
+    assert d[("Stock change [note 4]", "2020")] == "0.25"
+
+
 def test_process_sheet_manual_path(spark):
     wrangled = wrangle_workbook({"1.1": raw_sheet()})["1.1"]
     out = process_sheet(spark, wrangled, ignore_mapping=True,

@@ -44,6 +44,50 @@ def staged(spark, warehouse_root):
     return eng
 
 
+@contextlib.contextmanager
+def jobs_of(sc, group: str):
+    """Run the body under Spark job group *group*; yields a list that
+    holds the group's job ids once the body ends."""
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setJobGroup(None, None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_publish_job_counts(spark, warehouse_root):
+    """Exact Spark job budget of the write path. The ingest log and the
+    metadata catalog are driver-side files, so the log path runs no
+    job at all; an ingest is one validation aggregate plus the data
+    write; a one-table stage is the staged write plus the catalog
+    stats; and the stage pre-fills the page memos, so the first page
+    after it runs only the page collect."""
+    sc = spark.sparkContext
+    eng = Engine(spark, warehouse_root)
+    rows = [
+        Row(row=i, label=f"l{i}", year=2020 + i % 3, fuel=f"f{i % 5}",
+            group="G", item=f"i{i}", unit="u", value=float(i))
+        for i in range(50)
+    ]
+    df = spark.createDataFrame(rows)
+    with jobs_of(sc, "pin-ingest") as ingest:
+        eng.ingest(df, "dukes", "1.1", ingest_ts=datetime(2024, 1, 1))
+    with jobs_of(sc, "pin-stage") as stage:
+        assert eng.stage("dukes") == ["1.1"]
+    with jobs_of(sc, "pin-first-page") as page:
+        eng.query_page("dukes", "1.1", limit=10)
+    with jobs_of(sc, "pin-log") as log:
+        eng.warehouse.next_ingest_id("dukes")
+        eng.warehouse.winners("dukes")
+        eng.warehouse.metadata_rows("dukes")
+    assert len(ingest) <= 4, ingest
+    assert len(stage) <= 14, stage
+    assert len(page) == 1, page
+    assert log == []
+
+
 def test_forced_table_name_prunes_partitions(staged):
     plan = plan_of(staged.query("dukes", "1.1", prune_null_columns=False))
     # prod is partitioned by table_name; the forced equality must land
@@ -748,33 +792,36 @@ def test_barrier_gate_is_a_noop_small_and_persists_large(spark, monkeypatch):
     here on a funnel query, the family that motivated the gate."""
     from queens_spark.queries import QUERIES, _barrier, load
 
+    def q198():
+        return sorted(
+            tuple(r) for r in QUERIES["q198_funnel_conversion"](
+                spark, SF_DIR
+            ).collect()
+        )
+
     ev = load(spark, SF_DIR, "events")
     small = _barrier(ev.groupBy("user_id").count(), SF_DIR, "events")
     assert small.storageLevel.useMemory is False  # gate off: no-op
+    baseline = q198()  # the default threshold, env var unset
 
     monkeypatch.setenv("QS_BARRIER_MIN_SRC_BYTES", "0")
     big = _barrier(ev.groupBy("user_id").count(), SF_DIR, "events")
     try:
         assert big.storageLevel.useMemory is True  # gate on: persisted
-
-        baseline = sorted(
-            tuple(r) for r in QUERIES["q198_funnel_conversion"](
-                spark, SF_DIR
-            ).collect()
-        )
+        gated = q198()
         monkeypatch.delenv("QS_BARRIER_MIN_SRC_BYTES")
-        monkeypatch.setenv("QS_BARRIER_MIN_SRC_BYTES", "0")
-        gated = sorted(
-            tuple(r) for r in QUERIES["q198_funnel_conversion"](
-                spark, SF_DIR
-            ).collect()
-        )
-        monkeypatch.delenv("QS_BARRIER_MIN_SRC_BYTES")
-        ungated = sorted(
-            tuple(r) for r in QUERIES["q198_funnel_conversion"](
-                spark, SF_DIR
-            ).collect()
-        )
+        ungated = q198()
         assert gated == ungated == baseline
     finally:
         spark.catalog.clearCache()
+
+
+def test_barrier_gate_ignores_a_suffixed_threshold(spark, monkeypatch):
+    """A threshold that is not a plain byte count ("256m") falls back
+    to the default instead of failing the query build."""
+    from queens_spark.queries import _barrier, load
+
+    monkeypatch.setenv("QS_BARRIER_MIN_SRC_BYTES", "256m")
+    ev = load(spark, SF_DIR, "events")
+    out = _barrier(ev.groupBy("user_id").count(), SF_DIR, "events")
+    assert out.storageLevel.useMemory is False  # the default gate: no-op

@@ -832,6 +832,9 @@ def test_train_coarse_centroids_guards(spark, emb):
                                iters=0)
     with pytest.raises(ValueError, match=">= 2 centroid seeds"):
         train_coarse_centroids(emb, "embedding", "vec_id", [0], iters=1)
+    with pytest.raises(ValueError, match="not both"):
+        train_coarse_centroids(emb, "embedding", "vec_id", [0, 200],
+                               centroids_pred=F.col("vec_id") < 2)
 
 
 def test_train_coarse_centroids_zero_norm_guards(spark):

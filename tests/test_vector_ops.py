@@ -3,6 +3,7 @@ bulk vector operators must be BIT-identical — same quantization, same
 integer arithmetic, same IEEE cosine — or query plans could silently
 change results when switching paths at scale."""
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -666,6 +667,19 @@ def test_kmeans_refine_lazy_seed_pred_matches_id_list(spark):
     assert sorted(map(tuple, by_list.collect())) == sorted(
         map(tuple, by_pred.collect())
     )
+
+
+def test_kmeans_refine_rejects_both_seed_sources(spark):
+    from pyspark.sql import functions as F
+
+    from queens_spark.operators.similarity import kmeans_refine
+
+    df = spark.createDataFrame(
+        [(i, [i, 1]) for i in range(4)], "vec_id long, embedding array<int>"
+    )
+    with pytest.raises(ValueError, match="not both"):
+        kmeans_refine(df, "embedding", "vec_id", [0, 2],
+                      centroids_pred=F.col("vec_id") < 2)
 
 
 def test_train_coarse_centroids_pred_matches_id_list(spark):
