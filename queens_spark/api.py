@@ -44,7 +44,8 @@ class QueryService:
     ) -> ServiceResponse:
         if collection not in self.engine.schemas:
             return ServiceResponse(404, {"detail": f"unknown collection '{collection}'"})
-        if not self.engine.warehouse.queryable_columns(collection, table_name):
+        queryable = self.engine.warehouse.queryable_columns(collection, table_name)
+        if not queryable:
             return ServiceResponse(
                 404, {"detail": f"table '{table_name}' is not staged"}
             )
@@ -55,7 +56,8 @@ class QueryService:
                 return ServiceResponse(400, {"detail": f"malformed filters JSON: {exc}"})
         try:
             records, next_cursor = self.engine.query_page(
-                collection, table_name, filters, limit=limit, cursor=cursor
+                collection, table_name, filters, limit=limit, cursor=cursor,
+                queryable=queryable,
             )
         except (KeyError, NameError, ValueError, TypeError) as exc:
             return ServiceResponse(422, {"detail": str(exc)})

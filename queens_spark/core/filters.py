@@ -196,6 +196,38 @@ def compile_filters(
     return expr
 
 
+# ------------------------------------------------------------ requests
+
+def _canonical(raw: FilterGroup, valid: FilterGroup) -> tuple:
+    """One validated group as a sorted, hashable tuple of
+    ``(col, op, type of the value as given, validated value)``. The
+    given type keeps values that differ only in type (``2020`` and
+    ``"2020"``, a datetime and its ``str``) apart, even where the cast
+    makes them equal."""
+    return tuple(sorted(
+        (col, op, type(raw[col][op]), val)
+        for col, ops in valid.items()
+        for op, val in ops.items()
+    ))
+
+
+def filter_key(
+    filters: Mapping[str, Any] | None,
+    schema: CollectionSchema,
+    queryable: set[str] | None = None,
+) -> tuple:
+    """normalise → validate, then a canonical hashable form of the
+    validated IR. Pure Python (no py4j call), so it runs on every
+    request: a bad filter raises the DSL errors each time, and the two
+    spellings of one filter (``{"year": 2020}`` and ``{"year": {"eq":
+    2020}}``) give the same key."""
+    base, or_groups = normalize_filters(filters)
+    vbase, vor = validate_filters(base, or_groups, schema, queryable)
+    return _canonical(base, vbase), tuple(
+        _canonical(g, vg) for g, vg in zip(or_groups, vor)
+    )
+
+
 def build_filter_expr(
     filters: Mapping[str, Any] | None,
     schema: CollectionSchema,
@@ -204,7 +236,10 @@ def build_filter_expr(
 ) -> Column:
     """normalise → validate → compile, with *forced* equality predicates
     (the mandatory ``table_name`` filter, queens/api/app.py:112) injected
-    into the base group after validation so they can't be overridden."""
+    into the base group after validation so they can't be overridden.
+    Compiling builds the Column over py4j; a caller serving many
+    requests of one filter keys a memo on :func:`filter_key` and calls
+    this on a miss only."""
     base, or_groups = normalize_filters(filters)
     base, or_groups = validate_filters(base, or_groups, schema, queryable)
     if forced:

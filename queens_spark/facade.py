@@ -8,12 +8,14 @@ pruning → optional ordered limit + keyset cursor.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from queens_spark.core.errors import UnknownColumnError
-from queens_spark.core.filters import build_filter_expr
+from queens_spark.core.filters import build_filter_expr, filter_key
 from queens_spark.core.schema import SCHEMAS, CollectionSchema
 from queens_spark.settings import (
     DEFAULT_LIMIT,
@@ -23,6 +25,10 @@ from queens_spark.settings import (
     SERVICE_COLUMNS,
 )
 from queens_spark.store.warehouse import Warehouse
+
+#: Page plans one Engine keeps (see ``Engine.query_page``): enough for
+#: every (table, filter) chain a few interactive sessions walk at once.
+PAGE_PLAN_MEMO_SIZE = 64
 
 
 def drop_all_null_columns(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
@@ -52,6 +58,12 @@ class Engine:
         self.spark = spark
         self.warehouse = Warehouse(spark, warehouse_root)
         self.schemas = dict(schemas or SCHEMAS)
+        # (collection, table, snapshot tokens, filter key) ->
+        # (ordered base frame, its columns), least recently used first
+        self._page_plans: OrderedDict[tuple, tuple[DataFrame, tuple[str, ...]]] = (
+            OrderedDict()
+        )
+        self._page_plans_lock = threading.Lock()
         # bucketed-table registrations are session-scoped (in-memory
         # catalog); re-create any the warehouse manifest records so the
         # zero-exchange join layout survives session restarts
@@ -2144,6 +2156,54 @@ class Engine:
         Query and staging results are unchanged."""
         return self.warehouse.compact(collection, target_files, which)
 
+    def _staged_columns(self, collection: str, table_name: str) -> set[str]:
+        """The table's populated columns; raises UnknownColumnError for
+        an unknown collection or a table that is not staged."""
+        self.schema_for(collection)
+        queryable = self.warehouse.queryable_columns(collection, table_name)
+        if not queryable:
+            raise UnknownColumnError(
+                f"table '{table_name}' is not staged for '{collection}'"
+            )
+        return queryable
+
+    def _filtered(
+        self,
+        collection: str,
+        table_name: str,
+        filters: Mapping[str, Any] | None,
+        queryable: set[str],
+        tdir: str | None,
+        prune_null_columns: bool,
+    ) -> DataFrame:
+        """The one build path of :meth:`query` and :meth:`query_page`:
+        prod under the forced table_name equality and the filter, less
+        the rows of a pending takedown, service columns dropped and,
+        with *prune_null_columns*, the table's all-null columns too."""
+        expr = build_filter_expr(
+            filters, self.schema_for(collection), queryable,
+            forced={"table_name": table_name},
+        )
+        df = self.warehouse.read_prod(collection).where(expr)
+        if tdir is not None:
+            # retired-but-not-yet-restaged rows must not serve: the
+            # coverage-scoped anti-join against the takedown artifact
+            # (store/takedown.py). Collections with no pending
+            # takedown skip this entirely — plans stay byte-identical
+            from queens_spark.store.takedown import apply_takedowns
+
+            df = apply_takedowns(df, self.spark, tdir)
+        cols = [c for c in df.columns if c not in SERVICE_COLUMNS]
+        if prune_null_columns:
+            # Metadata-driven P7: the catalog already records which
+            # columns are populated per table (all-null ones are absent
+            # by construction, store/warehouse.refresh_metadata), so
+            # pruning is a projection — no per-query aggregation scan
+            # of the fact table.
+            keep = set(queryable) | {"table_name", ROW_UID}
+            cols = [c for c in cols if c in keep]
+        return df.select(*cols)
+
     def query(
         self,
         collection: str,
@@ -2163,39 +2223,65 @@ class Engine:
           ``row_uid`` (O1/O2): the cursor predicate is pushed into the
           parquet scan, so page N never rescans pages 1..N-1.
         """
-        schema = self.schema_for(collection)
-        queryable = self.warehouse.queryable_columns(collection, table_name)
-        if not queryable:
-            raise UnknownColumnError(
-                f"table '{table_name}' is not staged for '{collection}'"
-            )
-        expr = build_filter_expr(
-            filters, schema, queryable, forced={"table_name": table_name}
+        queryable = self._staged_columns(collection, table_name)
+        df = self._filtered(
+            collection, table_name, filters, queryable,
+            self._pending_takedown_dir(collection), prune_null_columns,
         )
-        df = self.warehouse.read_prod(collection).where(expr)
-        tdir = self._pending_takedown_dir(collection)
-        if tdir is not None:
-            # retired-but-not-yet-restaged rows must not serve: the
-            # coverage-scoped anti-join against the takedown artifact
-            # (store/takedown.py). Collections with no pending
-            # takedown skip this entirely — plans stay byte-identical
-            from queens_spark.store.takedown import apply_takedowns
-
-            df = apply_takedowns(df, self.spark, tdir)
         if cursor is not None:
             df = df.where(F.col(ROW_UID) > int(cursor))
         if limit is not None:
             df = df.orderBy(ROW_UID).limit(min(int(limit), MAX_LIMIT))
-        df = df.drop(*[c for c in SERVICE_COLUMNS if c in df.columns])
-        if prune_null_columns:
-            # Metadata-driven P7: the catalog already records which
-            # columns are populated per table (all-null ones are absent
-            # by construction, store/warehouse.refresh_metadata), so
-            # pruning is a projection — no per-query aggregation scan
-            # of the fact table.
-            keep = set(queryable) | {"table_name", ROW_UID}
-            df = df.select(*[c for c in df.columns if c in keep])
         return df
+
+    def _page_plan(
+        self,
+        collection: str,
+        table_name: str,
+        filters: Mapping[str, Any] | None,
+        queryable: set[str],
+    ) -> tuple[DataFrame, tuple[str, ...]]:
+        """The ordered base frame of a page chain and its columns,
+        memoized on the prod and catalog snapshot tokens, the pending
+        takedown state and the validated filter. The filter is
+        validated on every call, hit or miss; only a miss compiles it
+        and builds the frame (py4j calls)."""
+        fkey = filter_key(filters, self.schema_for(collection), queryable)
+        wh = self.warehouse
+        tdir = self._pending_takedown_dir(collection)
+        tokens = (
+            wh._snapshot_token(wh.prod_path(collection)),
+            wh._snapshot_token(wh.meta_path(collection)),
+            # a second takedown while one is pending keeps tdir but
+            # rewrites its manifest, which bumps the dir's token
+            tdir, tdir and wh._snapshot_token(tdir),
+        )
+        key = (collection, table_name, tokens, fkey)
+        with self._page_plans_lock:
+            plan = self._page_plans.get(key)
+            if plan is not None:
+                self._page_plans.move_to_end(key)
+                return plan
+        # A page record drops null values, so leaving out the columns
+        # the catalog knows are all null in this table changes no
+        # record and spares the collect their bytes. The catalog is
+        # re-read here, after the tokens: one the caller probed before
+        # them may predate the snapshot this entry is keyed on.
+        base = self._filtered(
+            collection, table_name, filters,
+            wh.queryable_columns(collection, table_name), tdir,
+            prune_null_columns=True,
+        ).orderBy(ROW_UID)
+        plan = (base, tuple(base.columns))
+        with self._page_plans_lock:
+            # entries built on a superseded snapshot can never hit again
+            for k in [k for k in self._page_plans
+                      if k[0] == collection and k[2] != tokens]:
+                del self._page_plans[k]
+            self._page_plans[key] = plan
+            while len(self._page_plans) > PAGE_PLAN_MEMO_SIZE:
+                self._page_plans.popitem(last=False)
+        return plan
 
     def query_page(
         self,
@@ -2204,23 +2290,34 @@ class Engine:
         filters: Mapping[str, Any] | None = None,
         limit: int = DEFAULT_LIMIT,
         cursor: int | None = None,
+        queryable: set[str] | None = None,
     ) -> tuple[list[dict], int | None]:
         """API-shaped page fetch: records + next_cursor (None on the
         last page — the optimistic full-page check of
-        queens/api/app.py:161-168)."""
+        queens/api/app.py:161-168).
+
+        The records are the rows of :meth:`query` with the same
+        filter, limit and cursor, less their null values. The chain's
+        plan is built once (see :meth:`_page_plan`), so a page is the
+        cursor predicate, the limit and one collect. *queryable* is
+        the table's populated column set when the caller has probed it
+        already."""
         limit = min(int(limit), MAX_LIMIT)
-        df = self.query(
-            collection, table_name, filters, limit=limit, cursor=cursor,
-            prune_null_columns=False,
+        if queryable is None:
+            queryable = self._staged_columns(collection, table_name)
+        base, columns = self._page_plan(collection, table_name, filters, queryable)
+        if cursor is not None:
+            base = base.where(F.col(ROW_UID) > int(cursor))
+        records = [
+            {k: v for k, v in zip(columns, row) if v is not None or k == ROW_UID}
+            for row in base.limit(limit).collect()
+        ]
+        # `records and` guards limit<=0 (an empty page must not index
+        # records[-1]) — the limit=0 page is legal and returns no cursor.
+        next_cursor = (
+            records[-1][ROW_UID] if records and len(records) == limit else None
         )
-        rows = [r.asDict() for r in df.collect()]
-        # `rows and` guards limit<=0 (an empty page must not index
-        # rows[-1]) — the limit=0 page is legal and returns no cursor.
-        next_cursor = rows[-1][ROW_UID] if rows and len(rows) == limit else None
-        cleaned = []
-        for r in rows:
-            cleaned.append({k: v for k, v in r.items() if v is not None or k == ROW_UID})
-        return cleaned, next_cursor
+        return records, next_cursor
 
     def table_description(self, collection: str, table_name: str) -> str | None:
         """Description of the STAGED version of *table_name* (the

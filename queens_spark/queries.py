@@ -221,17 +221,23 @@ def _barrier(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     upstream (scan included); runtime exchange reuse does NOT recover
     the duplicates here (join-side null filters make the subtrees
     non-identical). Whether the barrier pays depends on the source
-    size — the decision reads the parquet footprint (os.stat, the
-    load() pattern), so the same code is a no-op on a small input and
-    a single-computation barrier on a 100 TB one. Results are
-    identical either way (persist is semantics-free)."""
+    size — the decision sums the sizes of every file under the parquet
+    path (os.walk, so a hive-partitioned directory counts its
+    partition files), so the same code is a no-op on a small input
+    and a single-computation barrier on a 100 TB one. Results are
+    identical either way (persist is semantics-free).
+
+    A persisted frame is registered with ``dedup._persist``: call
+    ``operators.dedup.release_caches()`` once its results are
+    materialized, or the cache outlives the query."""
     import os as _os
 
     path = f"{sf_dir}/{table}.parquet"
     try:
         if _os.path.isdir(path):
             size = sum(
-                e.stat().st_size for e in _os.scandir(path) if e.is_file()
+                _os.path.getsize(_os.path.join(d, f))
+                for d, _, files in _os.walk(path) for f in files
             )
         else:
             size = _os.path.getsize(path)

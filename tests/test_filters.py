@@ -95,3 +95,44 @@ def test_validate_filters_both_parts():
     )
     assert base["year"]["gte"] == 2015
     assert groups[0]["fuel"]["eq"] == "Gas"
+
+
+# ------------------------------------------------------------ filter_key
+
+def test_filter_key_spellings_share_a_key():
+    from queens_spark.core.filters import filter_key
+
+    flat = filter_key({"year": 2020, "fuel": "Gas"}, DUKES_SCHEMA)
+    assert flat == filter_key({"fuel": {"eq": "Gas"}, "year": {"eq": 2020}},
+                              DUKES_SCHEMA)
+    assert filter_key({"$or": {"fuel": "Gas"}}, DUKES_SCHEMA) == filter_key(
+        {"$or": [{"fuel": {"eq": "Gas"}}]}, DUKES_SCHEMA)
+
+
+def test_filter_key_keeps_value_types_apart():
+    from datetime import datetime
+
+    from queens_spark.core.filters import filter_key
+    from queens_spark.core.schema import CollectionSchema, ColumnSpec
+
+    # both cast to the INTEGER 2020, yet never share a memo entry
+    assert filter_key({"year": 2020}, DUKES_SCHEMA) != filter_key(
+        {"year": "2020"}, DUKES_SCHEMA)
+    assert filter_key({"value": 1}, DUKES_SCHEMA) != filter_key(
+        {"value": 1.0}, DUKES_SCHEMA)
+    schema = CollectionSchema("ts", [ColumnSpec("at", "DATETIME")])
+    ts = datetime(2024, 1, 2, 3, 4, 5)
+    assert filter_key({"at": {"gte": ts}}, schema) != filter_key(
+        {"at": {"gte": str(ts)}}, schema)
+
+
+def test_filter_key_validates_every_call():
+    from queens_spark.core.filters import filter_key
+
+    for _ in range(2):
+        with pytest.raises(KeyError):
+            filter_key({"bogus": 1}, DUKES_SCHEMA)
+        with pytest.raises(NameError):
+            filter_key({"fuel": "Gas"}, DUKES_SCHEMA, queryable={"year"})
+        with pytest.raises(TypeError):
+            filter_key({"fuel": {"like": 5}}, DUKES_SCHEMA)

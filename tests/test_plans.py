@@ -88,6 +88,35 @@ def test_publish_job_counts(spark, warehouse_root):
     assert log == []
 
 
+def test_warm_chain_page_runs_one_job_on_the_pinned_plan(spark, staged):
+    """Page 2 of a warm chain reuses the chain's memoized plan: one
+    Spark job, whose executed plan still pushes the cursor into the
+    scan, prunes to the forced table_name partition and compiles the
+    ordered limit to TakeOrderedAndProject."""
+    sc = spark.sparkContext
+    f = {"year": {"gte": 2021}}
+    _, cursor = staged.query_page("dukes", "1.1", f, limit=5)
+    assert cursor is not None
+    with jobs_of(sc, "pin-warm-page-2") as page:
+        rows, _ = staged.query_page("dukes", "1.1", f, limit=5, cursor=cursor)
+    assert len(page) == 1, page
+    assert rows and all(r["row_uid"] > cursor for r in rows)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if e.jobs().contains(page[0])
+    ]
+    assert len(plans) == 1, plans
+    plan = plans[0]
+    assert "TakeOrderedAndProject" in plan, plan
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert any("row_uid" in ln for ln in pushed), plan
+    parts = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    assert any("table_name" in ln for ln in parts), plan
+
+
 def test_forced_table_name_prunes_partitions(staged):
     plan = plan_of(staged.query("dukes", "1.1", prune_null_columns=False))
     # prod is partitioned by table_name; the forced equality must land
@@ -825,3 +854,30 @@ def test_barrier_gate_ignores_a_suffixed_threshold(spark, monkeypatch):
     ev = load(spark, SF_DIR, "events")
     out = _barrier(ev.groupBy("user_id").count(), SF_DIR, "events")
     assert out.storageLevel.useMemory is False  # the default gate: no-op
+
+
+def test_barrier_gate_sizes_a_partitioned_source(spark, monkeypatch, tmp_path):
+    """A hive-partitioned source keeps its files in ``table_name=``
+    subdirectories; the gate sums them, so such a source above the
+    threshold is persisted, and one below it is left alone."""
+    from queens_spark.operators.dedup import release_caches
+    from queens_spark.queries import _barrier
+
+    src = spark.range(200).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("table_name"))
+    path = tmp_path / "events.parquet"
+    src.write.partitionBy("table_name").parquet(str(path))
+    top = sum(f.stat().st_size for f in path.iterdir() if f.is_file())
+    size = sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
+    assert size > top  # the data files sit in the partition dirs
+    frame = spark.read.parquet(str(path))
+
+    monkeypatch.setenv("QS_BARRIER_MIN_SRC_BYTES", str(size))
+    big = _barrier(frame.groupBy("table_name").count(), str(tmp_path), "events")
+    try:
+        assert big.storageLevel.useMemory is True
+    finally:
+        release_caches()
+    monkeypatch.setenv("QS_BARRIER_MIN_SRC_BYTES", str(size + 1))
+    small = _barrier(frame.groupBy("table_name").count(), str(tmp_path), "events")
+    assert small.storageLevel.useMemory is False
