@@ -122,7 +122,7 @@ def validate_group(
                 )
             try:
                 out_ops[op] = cast(val)
-            except (ValueError, TypeError) as exc:
+            except (ValueError, TypeError, OverflowError) as exc:
                 raise InvalidValueTypeError(
                     f"cannot cast {val!r} to {sql_type} for '{col}': {exc}"
                 ) from None

@@ -123,17 +123,15 @@ def generate_config(
 
 def initialize(engine: Engine, collections: list[str] | None = None) -> bool:
     """Idempotent warehouse bootstrap (parity: initialize,
-    queens/etl/bootstrap.py:8-44). Creates the per-collection system
-    stores (empty, typed ingest log + metadata) so catalog probes work
-    before any ingest. Returns True if anything was created."""
+    queens/etl/bootstrap.py:8-44). Creates each collection's empty,
+    typed ingest log; the catalog of an unstaged collection reads as
+    empty, so catalog probes work before any ingest. Returns True if
+    anything was created."""
     created = False
     for collection in collections or list(engine.schemas):
         wh = engine.warehouse
         if not wh._exists(wh.log_path(collection)):
             wh._append_log(collection, [])
-            created = True
-        if not wh._exists(wh.meta_path(collection)):
-            wh._write_metadata(collection, [])
             created = True
     return created
 

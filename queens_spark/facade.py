@@ -532,21 +532,30 @@ class Engine:
                     return ent["id_col"]
         return None
 
-    def _pending_takedown_dir(self, collection: str) -> str | None:
-        """The takedown dir when retired ids might still be visible in
-        PROD (live segments whose seq the staged manifest has not yet
-        absorbed) — the query-path filter gate. None keeps untouched
-        collections' plans byte-identical (no join added)."""
+    def _pending_takedown(
+        self, collection: str, staged: dict | None = None
+    ) -> tuple[str | None, int | None]:
+        """The takedown dir and its manifest ``seq`` when retired ids
+        might still be visible in PROD (live segments whose seq the
+        staged manifest has not yet absorbed) — the query-path filter
+        gate; ``(None, None)`` keeps untouched collections' plans
+        byte-identical (no join added). *staged* is the staged
+        manifest when the caller has read it already."""
         from queens_spark.store.takedown import read_manifest
 
         tdir = self._takedown_dir(collection)
         m = read_manifest(tdir)
         if not (m.get("segments") or []):
-            return None
-        staged = self.warehouse._read_manifest(collection) or {}
-        if int(staged.get("takedown_seq", 0)) == int(m.get("seq", 0)):
-            return None  # prod already reflects every segment
-        return tdir
+            return None, None
+        if staged is None:
+            staged = self.warehouse._read_manifest(collection) or {}
+        seq = int(m.get("seq", 0))
+        if int(staged.get("takedown_seq", 0)) == seq:
+            return None, None  # prod already reflects every segment
+        return tdir, seq
+
+    def _pending_takedown_dir(self, collection: str) -> str | None:
+        return self._pending_takedown(collection)[0]
 
     def _purge_takedowns(self, collection: str) -> dict:
         """Apply the collection's pending takedown segments PHYSICALLY
@@ -2175,16 +2184,18 @@ class Engine:
         queryable: set[str],
         tdir: str | None,
         prune_null_columns: bool,
+        snap: int | None = None,
     ) -> DataFrame:
         """The one build path of :meth:`query` and :meth:`query_page`:
-        prod under the forced table_name equality and the filter, less
-        the rows of a pending takedown, service columns dropped and,
-        with *prune_null_columns*, the table's all-null columns too."""
+        prod snapshot *snap* (default: the committed one) under the
+        forced table_name equality and the filter, less the rows of a
+        pending takedown, service columns dropped and, with
+        *prune_null_columns*, the table's all-null columns too."""
         expr = build_filter_expr(
             filters, self.schema_for(collection), queryable,
             forced={"table_name": table_name},
         )
-        df = self.warehouse.read_prod(collection).where(expr)
+        df = self.warehouse.read_prod(collection, snap).where(expr)
         if tdir is not None:
             # retired-but-not-yet-restaged rows must not serve: the
             # coverage-scoped anti-join against the takedown artifact
@@ -2242,20 +2253,18 @@ class Engine:
         queryable: set[str],
     ) -> tuple[DataFrame, tuple[str, ...]]:
         """The ordered base frame of a page chain and its columns,
-        memoized on the prod and catalog snapshot tokens, the pending
-        takedown state and the validated filter. The filter is
-        validated on every call, hit or miss; only a miss compiles it
-        and builds the frame (py4j calls)."""
+        memoized on the committed snapshot id, the pending takedown's
+        seq and the validated filter. The filter is validated on every
+        call, hit or miss; only a miss compiles it and builds the
+        frame (py4j calls)."""
         fkey = filter_key(filters, self.schema_for(collection), queryable)
         wh = self.warehouse
-        tdir = self._pending_takedown_dir(collection)
-        tokens = (
-            wh._snapshot_token(wh.prod_path(collection)),
-            wh._snapshot_token(wh.meta_path(collection)),
-            # a second takedown while one is pending keeps tdir but
-            # rewrites its manifest, which bumps the dir's token
-            tdir, tdir and wh._snapshot_token(tdir),
-        )
+        # one manifest read names the snapshot, and with it the files
+        # and the catalog, that this entry is built on
+        staged = wh._read_manifest(collection) or {}
+        snap = staged.get("snapshot")
+        tdir, td_seq = self._pending_takedown(collection, staged)
+        tokens = (snap, td_seq)
         key = (collection, table_name, tokens, fkey)
         with self._page_plans_lock:
             plan = self._page_plans.get(key)
@@ -2264,13 +2273,11 @@ class Engine:
                 return plan
         # A page record drops null values, so leaving out the columns
         # the catalog knows are all null in this table changes no
-        # record and spares the collect their bytes. The catalog is
-        # re-read here, after the tokens: one the caller probed before
-        # them may predate the snapshot this entry is keyed on.
+        # record and spares the collect their bytes.
         base = self._filtered(
             collection, table_name, filters,
-            wh.queryable_columns(collection, table_name), tdir,
-            prune_null_columns=True,
+            wh.queryable_columns(collection, table_name, snap), tdir,
+            prune_null_columns=True, snap=snap,
         ).orderBy(ROW_UID)
         plan = (base, tuple(base.columns))
         with self._page_plans_lock:

@@ -135,17 +135,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def duckdb_word_shingles(expr: str, n: int = 3) -> str:
-    """DuckDB twin of :func:`word_shingles`."""
-    toks = f"list_filter(string_split_regex({expr}, '\\s+'), x -> x <> '')"
-    return (
-        f"CASE WHEN len({toks}) < {n} THEN [] "
-        f"ELSE list_distinct(list_transform("
-        f"range(1, len({toks}) - {n} + 2), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n} - 1), ' '))) END"
-    )
-
-
 @column_memo
 def shingle_hashes(text: Column | str, n: int = 3, p: int = HASH_MOD) -> Column:
     """Distinct word n-gram shingle hashes, composed from per-token

@@ -1221,23 +1221,6 @@ def int8_quantize(vec: Column | str) -> Column:
     )
 
 
-def duckdb_int8_amax(expr: str) -> str:
-    """DuckDB expression for the max-abs scale of a vector column."""
-    return f"list_max(list_transform({expr}, x -> abs(CAST(x AS DOUBLE))))"
-
-
-def duckdb_int8_codes(expr: str, amax: str) -> str:
-    """DuckDB twin of the :func:`int8_quantize` code array, given a
-    PRECOMPUTED amax column (DuckDB cannot host a correlated scalar
-    subquery inside a lambda, so the amax must come from an earlier
-    CTE — see q66's oracle)."""
-    return (
-        f"CASE WHEN {amax} > 0 "
-        f"THEN list_transform({expr}, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / {amax}) AS BIGINT)) "
-        f"ELSE list_transform({expr}, x -> CAST(0 AS BIGINT)) END"
-    )
-
-
 def int8_dot(a: Column, b: Column) -> Column:
     """Exact dot product of two int8 code vectors, accumulated in
     BIGINT (tinyint×tinyint would overflow — the cast is the point)."""

@@ -11,7 +11,9 @@ Parity notes (citations into /root/reference/):
 
 from __future__ import annotations
 
+import math
 import os
+
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------- types
@@ -28,13 +30,30 @@ SPARK_TYPES: dict[str, T.DataType] = {
     "BINARY": T.BinaryType(),
 }
 
+
+def _integer(value) -> int:
+    """An int, its text or an integral float (2020.0); a fractional
+    value is rejected, not truncated."""
+    out = int(value)
+    if not isinstance(value, str) and out != value:
+        raise ValueError("not an integral value")
+    return out
+
+
+def _real(value) -> float:
+    out = float(value)
+    if not math.isfinite(out):
+        raise ValueError("not a finite number")
+    return out
+
+
 #: Python-side cast used when validating filter values (mirrors DTYPES,
 #: queens/settings.py:58-63): filter values arrive as JSON scalars and
 #: are coerced to the column's declared type before compilation.
 PY_CASTS = {
     "TEXT": str,
-    "INTEGER": int,
-    "REAL": float,
+    "INTEGER": _integer,
+    "REAL": _real,
     "DATETIME": str,  # ISO-8601 string; compared as timestamp
 }
 

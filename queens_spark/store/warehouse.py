@@ -5,31 +5,41 @@ Layout (under one warehouse root):
     raw/{collection}/        append-only fact data, partitioned by
                              table_name (partition pruning for the
                              mandatory per-query table_name predicate)
-    prod/{collection}/       staged snapshot, partitioned by table_name,
-                             with a persisted monotone ``row_uid`` per
-                             partition for cursor pagination
+    prod/{collection}/snap-{n}/
+                             one immutable staged snapshot, partitioned
+                             by table_name, with a persisted monotone
+                             ``row_uid`` per partition for cursor
+                             pagination, and its column catalog in
+                             ``_catalog.parquet``
+    system/{collection}/staged_manifest.json
+                             the committed snapshot id, each table's
+                             winner ingest_id and partition dir, and
+                             the takedown seq prod reflects
     system/{collection}/ingest_log/   version store (append-only)
-    system/{collection}/metadata/     per-table column catalog
 
-Spark reads and writes the fact data only. The two system tables are a
-handful of rows per ingest, so the driver reads and writes them with
-pyarrow and no Spark job (a Spark write of a one-row file cost about a
-second, a Spark ``max`` over the log half a second):
+Every prod write (stage, prod compaction) builds a NEW snapshot dir:
+Spark writes the changed tables, the files of unchanged tables are
+hard-linked from the committed snapshot (no bytes copied), and the
+catalog is written into it. One ``os.replace`` of the staged manifest
+then commits data and catalog together, and every entry of
+``prod/{collection}/`` but the new snapshot and the one it replaced
+is deleted, which also clears what a crashed write left behind. ``n``
+is one past every id in use, never reused, so every memo keys on the
+snapshot id. A prod staged before snapshots existed has no id in its
+manifest: it is not served, and the next stage restages it in full.
 
-- ``ingest_log/`` holds one parquet file per log append, named
-  ``{ingest_id:012d}-{success}.parquet`` (``000000000000-empty.parquet``
-  for the empty log ``etl.process.initialize`` creates). Each file is
-  written as ``.{name}.tmp`` and ``os.replace``d into place, so readers
-  never see a partial file.
-- ``metadata/`` holds the whole catalog in one file,
-  ``catalog.parquet``, replaced the same way on every refresh.
-- Logs and catalogs Spark wrote before this layout still read: every
-  visible ``*.parquet`` file counts. Spark stored ``ingest_ts`` as
-  INT96, which pyarrow reads as ``timestamp[ns]``; the driver writes
-  ``timestamp[us, tz=UTC]``. A whole-directory pyarrow read fails on
-  that mix, so each file is read on its own and cast to the driver
-  schema. A legacy catalog is superseded by the first
-  ``catalog.parquet`` written beside it.
+Spark reads and writes the fact data only. The ingest log and the
+catalog are a handful of rows per ingest, so the driver reads and
+writes them with pyarrow and no Spark job (a Spark write of a one-row
+file cost about a second, a Spark ``max`` over the log half a second).
+``ingest_log/`` holds one file per append, named
+``{ingest_id:012d}-{success}.parquet`` (``000000000000-empty.parquet``
+for the empty log ``etl.process.initialize`` creates); each driver
+file is written as ``.{name}.tmp`` and ``os.replace``d into place.
+Logs Spark wrote before this layout still read: Spark stored
+``ingest_ts`` as INT96 (``timestamp[ns]`` in pyarrow) where the driver
+writes ``timestamp[us, tz=UTC]``, and a whole-directory read fails on
+that mix, so each file is read on its own and cast.
 
 Parity map (file:line into /root/reference/):
 - ingest + provenance flip-flag:      queens/core/read_write.py:267-337
@@ -90,7 +100,9 @@ META_SCHEMA = T.StructType(
 #: the driver-side file schemas of the two system tables
 _LOG_ARROW = to_arrow_schema(LOG_SCHEMA)
 _META_ARROW = to_arrow_schema(META_SCHEMA)
-_CATALOG_FILE = "catalog.parquet"
+#: a snapshot's catalog file; Spark's file listing skips ``_`` names
+_CATALOG_FILE = "_catalog.parquet"
+_SNAP = "snap-"
 #: Spark's own datetime <-> epoch-microsecond rule (naive datetimes are
 #: local time), so driver-written ``ingest_ts`` values and ``as_of``
 #: cutoffs compare exactly as the Spark-written log did
@@ -119,6 +131,11 @@ def _parquet_files(path: str) -> list[str]:
         os.path.join(path, n) for n in names
         if n.endswith(".parquet") and not n.startswith((".", "_"))
     )
+
+
+def _n_files(path: str) -> int:
+    """Visible parquet data files in one partition dir."""
+    return len(_parquet_files(path))
 
 
 def _read_rows(files: list[str], schema: pa.Schema) -> list[dict]:
@@ -199,29 +216,14 @@ class Warehouse:
     def __init__(self, spark: SparkSession, root: str = DEFAULT_WAREHOUSE):
         self.spark = spark
         self.root = root
-        # Per-snapshot memo for driver-side metadata probes: maps
-        # (collection, table_name) -> (snapshot_token, value). The token
-        # is the store directory's mtime_ns, so the cache survives
-        # unrelated queries but self-invalidates when ANY process
-        # re-stages (os.replace bumps the dir mtime); stage() also
-        # clears eagerly. Mirrors the reference's one-time metadata
-        # probe per process (queens/etl/process.py metadata read) while
-        # staying correct across processes.
-        self._queryable_cache: dict[tuple[str, str], tuple[int, set[str]]] = {}
+        # Per-snapshot memos of the driver-side probes: (collection,
+        # table_name) -> (snapshot id, value), and collection ->
+        # (snapshot id, prod frame). A snapshot never changes once
+        # committed, so an entry is exact until the manifest names
+        # another id — in this process or any other.
+        self._queryable_cache: dict[tuple[str, str], tuple[int | None, set[str]]] = {}
         self._description_cache: dict[tuple[str, str], tuple[int, str | None]] = {}
         self._prod_frame_cache: dict[str, tuple[int, DataFrame]] = {}
-
-    def _snapshot_token(self, path: str) -> int:
-        try:
-            return os.stat(path).st_mtime_ns
-        except OSError:
-            return -1
-
-    def _invalidate_caches(self, collection: str) -> None:
-        for cache in (self._queryable_cache, self._description_cache):
-            for key in [k for k in cache if k[0] == collection]:
-                del cache[key]
-        self._prod_frame_cache.pop(collection, None)
 
     # ------------------------------------------------------------ paths
 
@@ -229,13 +231,16 @@ class Warehouse:
         return os.path.join(self.root, "raw", collection)
 
     def prod_path(self, collection: str) -> str:
+        """The dir holding the collection's ``snap-{n}`` snapshots."""
         return os.path.join(self.root, "prod", collection)
+
+    def snapshot_path(self, collection: str, snap: int | None = None) -> str:
+        """Dir of snapshot *snap* (default: the committed one)."""
+        snap = self.snapshot(collection) if snap is None else snap
+        return os.path.join(self.prod_path(collection), f"{_SNAP}{snap}")
 
     def log_path(self, collection: str) -> str:
         return os.path.join(self.root, "system", collection, "ingest_log")
-
-    def meta_path(self, collection: str) -> str:
-        return os.path.join(self.root, "system", collection, "metadata")
 
     def manifest_path(self, collection: str) -> str:
         return os.path.join(
@@ -251,25 +256,33 @@ class Warehouse:
     def table_exists(self, collection: str, which: str = "raw") -> bool:
         return self._exists(getattr(self, f"{which}_path")(collection))
 
+    def snapshot(self, collection: str) -> int | None:
+        """Id of the committed prod snapshot; None when nothing is
+        staged (or prod predates snapshots)."""
+        return (self._read_manifest(collection) or {}).get("snapshot")
+
     def is_staged(self, collection: str) -> bool:
-        return self._exists(self.prod_path(collection))
+        return self.snapshot(collection) is not None
 
     # ------------------------------------------------------------- read
 
     def read_raw(self, collection: str) -> DataFrame:
         return self.spark.read.parquet(self.raw_path(collection))
 
-    def read_prod(self, collection: str) -> DataFrame:
-        """Staged snapshot. The DataFrame (an immutable logical plan
-        over the snapshot's file listing) is memoized per snapshot:
-        re-creating it per page re-runs parquet schema/footer probing —
-        a whole Spark job of pure overhead on the interactive path."""
-        token = self._snapshot_token(self.prod_path(collection))
+    def read_prod(self, collection: str, snap: int | None = None) -> DataFrame:
+        """Prod snapshot *snap* (default: the committed one). The
+        DataFrame (an immutable logical plan over the snapshot's file
+        listing) is memoized per snapshot id: re-creating it per page
+        re-runs parquet schema/footer probing — a whole Spark job of
+        pure overhead on the interactive path."""
+        snap = self.snapshot(collection) if snap is None else snap
+        if snap is None:
+            raise StagingError(f"'{collection}' is not staged")
         cached = self._prod_frame_cache.get(collection)
-        if cached is not None and cached[0] == token:
+        if cached is not None and cached[0] == snap:
             return cached[1]
-        df = self.spark.read.parquet(self.prod_path(collection))
-        self._prod_frame_cache[collection] = (token, df)
+        df = self.spark.read.parquet(self.snapshot_path(collection, snap))
+        self._prod_frame_cache[collection] = (snap, df)
         return df
 
     def log_rows(self, collection: str) -> list[dict]:
@@ -301,25 +314,20 @@ class Warehouse:
         """The resolved ingest log (:meth:`log_rows`) as a Spark frame."""
         return self._frame(self.log_rows(collection), LOG_SCHEMA)
 
-    def metadata_rows(self, collection: str) -> list[dict]:
-        """The metadata catalog, read on the driver. A driver-written
-        ``catalog.parquet`` supersedes any legacy Spark part files
-        still beside it (a refresh that died before removing them)."""
-        files = _parquet_files(self.meta_path(collection))
-        catalog = os.path.join(self.meta_path(collection), _CATALOG_FILE)
-        return _read_rows([catalog] if catalog in files else files, _META_ARROW)
+    def metadata_rows(
+        self, collection: str, snap: int | None = None
+    ) -> list[dict]:
+        """The metadata catalog of prod snapshot *snap* (default: the
+        committed one), read on the driver; empty when nothing is
+        staged."""
+        snap = self.snapshot(collection) if snap is None else snap
+        if snap is None:
+            return []
+        path = os.path.join(self.snapshot_path(collection, snap), _CATALOG_FILE)
+        return _read_rows([path], _META_ARROW)
 
     def read_metadata(self, collection: str) -> DataFrame:
         return self._frame(self.metadata_rows(collection), META_SCHEMA)
-
-    def _write_metadata(self, collection: str, rows: list[dict]) -> None:
-        """Replace the whole catalog with *rows*, then drop any legacy
-        Spark part files the new ``catalog.parquet`` supersedes."""
-        out = self.meta_path(collection)
-        _write_rows(out, _CATALOG_FILE, rows, _META_ARROW)
-        for f in _parquet_files(out):
-            if os.path.basename(f) != _CATALOG_FILE:
-                os.remove(f)
 
     def winners(
         self, collection: str, as_of: datetime | str | None = None
@@ -402,26 +410,21 @@ class Warehouse:
     # ---------------------------------------------------------- staging
 
     def _read_manifest(self, collection: str) -> dict | None:
-        """Staged manifest: the winner ingest_id (and partition dir)
-        each staged table_name currently reflects. None = no manifest
-        (fresh warehouse or pre-manifest layout → full restage)."""
+        """Staged manifest: the committed ``snapshot`` id, the winner
+        ingest_id and partition dir of each staged table_name, and the
+        ``takedown_seq`` prod reflects. None = nothing staged."""
         try:
             with open(self.manifest_path(collection)) as fh:
                 return json.load(fh)
         except (OSError, ValueError):
             return None
 
-    def _write_manifest(
-        self, collection: str, tables: dict, takedown_seq: int = 0
-    ) -> None:
+    def _write_manifest(self, collection: str, manifest: dict) -> None:
         path = self.manifest_path(collection)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = path + "__tmp"
         with open(tmp, "w") as fh:
-            json.dump(
-                {"tables": tables, "takedown_seq": int(takedown_seq)},
-                fh, sort_keys=True,
-            )
+            json.dump(manifest, fh, sort_keys=True)
         os.replace(tmp, path)
 
     @staticmethod
@@ -434,15 +437,54 @@ class Warehouse:
                 out[urllib.parse.unquote(entry.split("=", 1)[1])] = entry
         return out
 
+    def _next_snapshot(self, collection: str, current: int | None) -> int:
+        """One past the committed id and every ``snap-{n}`` on disk, so
+        no id is reused — not even one a crashed write left behind."""
+        prod = self.prod_path(collection)
+        names = os.listdir(prod) if os.path.isdir(prod) else []
+        ids = [int(n[len(_SNAP):]) for n in names
+               if n.startswith(_SNAP) and n[len(_SNAP):].isdigit()]
+        return max([current or 0, *ids]) + 1
+
+    @staticmethod
+    def _link(src: str, dst: str, names: list[str]) -> None:
+        """Hard-link the files and partition dirs *names* of snapshot
+        dir *src* into *dst*: what did not change moves to the next
+        snapshot with no bytes copied."""
+        for name in names:
+            s, d = os.path.join(src, name), os.path.join(dst, name)
+            if os.path.isdir(s):
+                os.makedirs(d)
+                for f in os.listdir(s):
+                    os.link(os.path.join(s, f), os.path.join(d, f))
+            else:
+                os.link(s, d)
+
+    def _commit(
+        self, collection: str, manifest: dict, replaced: int | None
+    ) -> None:
+        """Commit the snapshot *manifest* names with one rename, then
+        delete every entry of prod/{collection} but that snapshot and
+        the one it *replaced* (a reader that resolved the old manifest
+        may still be listing it). That also clears what a crashed
+        write left behind, and a layout from before snapshots."""
+        self._write_manifest(collection, manifest)
+        keep = {f"{_SNAP}{manifest['snapshot']}", f"{_SNAP}{replaced}"}
+        prod = self.prod_path(collection)
+        for name in set(os.listdir(prod)) - keep:
+            path = os.path.join(prod, name)
+            (shutil.rmtree if os.path.isdir(path) else os.remove)(path)
+
     def stage(
         self,
         schema: CollectionSchema,
         as_of: datetime | str | None = None,
         takedown: dict | None = None,
     ) -> list[str]:
-        """Bring the prod snapshot to the latest successful version of
-        each table_name with ingest_ts ≤ *as_of* (queens/core/
-        read_write.py:340-404), then refresh metadata.
+        """Bring prod to the latest successful version of each
+        table_name with ingest_ts ≤ *as_of* (queens/core/
+        read_write.py:340-404), with its metadata catalog, as a new
+        committed snapshot (see the module docstring).
 
         The reference's `MAX(ingest_ts) GROUP BY table_name` CTE +
         double join collapses to a driver-side pick over the resolved
@@ -453,20 +495,20 @@ class Warehouse:
         ``table_description`` memos, so the first page after a stage
         runs one Spark job.
 
-        INCREMENTAL: a staged manifest records which winner ingest_id
-        each prod table reflects, so a re-stage rewrites ONLY the
-        table_name partitions whose winner changed (plus removals when
-        an ``as_of`` cutoff rolls a table out) — at 100 TB, staging
-        after one table's ingest is O(that table), not a full prod
-        rebuild + renumber. Sound because every per-table artifact is
-        independent: row_uid numbering is per-table by construction
-        (see with_row_uid — partition chunks offset within table_name),
-        and the metadata catalog groups by table_name, so unchanged
-        tables' files and catalog rows are byte-identical either way.
-        Each changed table swaps in via two renames (old aside, new
-        in); the manifest is written only after all swaps + metadata,
-        so a crash mid-stage re-stages the incomplete tables on the
-        next call instead of losing them.
+        INCREMENTAL: the staged manifest records which winner
+        ingest_id each prod table reflects, so a stage writes ONLY
+        the tables whose winner changed (an ``as_of`` cutoff may also
+        roll a table out) and hard-links the others' files — at
+        100 TB, staging after one table's ingest is O(that table), not
+        a full prod rebuild + renumber (a first stage is one in which
+        every table changed). Sound because every per-table
+        artifact is independent: row_uid numbering is per-table by
+        construction (see with_row_uid — partition chunks offset
+        within table_name), and the metadata catalog groups by
+        table_name, so unchanged tables' files and catalog rows are
+        byte-identical either way. Nothing the committed snapshot
+        holds is touched, so a crash at any step leaves it serving,
+        and the next stage starts over.
 
         *takedown* (``Engine.stage`` supplies it from the collection's
         takedown artifact, store/takedown.py) makes retirements reach
@@ -487,41 +529,77 @@ class Warehouse:
                 f"no successful ingests for '{collection}' at cutoff {cutoff}"
             )
 
-        out = self.prod_path(collection)
-        manifest = self._read_manifest(collection) if self._exists(out) else None
-        prev = (manifest or {}).get("tables", {})
-        incremental = manifest is not None
+        manifest = self._read_manifest(collection) or {}
+        current = manifest.get("snapshot")
+        prev = manifest.get("tables", {}) if current is not None else {}
         td_seq = int((takedown or {}).get("seq", 0))
-        prev_td_seq = int((manifest or {}).get("takedown_seq", 0))
-        if incremental:
-            changed_set = {
-                t for t, r in winners.items()
-                if t not in prev or prev[t].get("ingest_id") != r["ingest_id"]
-            }
-            if takedown is not None and td_seq != prev_td_seq:
-                # takedown-affected tables re-filter even when their
-                # winner version did not change
-                changed_set |= set(takedown.get("changed_tables") or ()) & set(
-                    winners
-                )
-            changed = sorted(changed_set)
-            removed = sorted(t for t in prev if t not in winners)
-        else:
-            changed, removed = sorted(winners), []
+        prev_td_seq = int(manifest.get("takedown_seq", 0))
+        changed_set = {
+            t for t, r in winners.items()
+            if prev.get(t, {}).get("ingest_id") != r["ingest_id"]
+        }
+        if takedown is not None and td_seq != prev_td_seq:
+            # takedown-affected tables re-filter even when their
+            # winner version did not change
+            changed_set |= set(takedown.get("changed_tables") or ()) & set(
+                winners
+            )
+        changed = sorted(changed_set)
+        kept = {t: e for t, e in prev.items()
+                if t in winners and t not in changed_set}
 
-        if not changed and not removed:
+        if len(kept) == len(prev) and not changed:
             if td_seq != prev_td_seq:
                 # e.g. a purge cleared every live segment: nothing to
                 # rewrite, but record the new seq so later stages stop
                 # diffing against a stale takedown state
-                self._write_manifest(collection, prev, takedown_seq=td_seq)
+                self._write_manifest(
+                    collection, dict(manifest, takedown_seq=td_seq)
+                )
             return sorted(winners)
 
-        raw = self.read_raw(collection)
-        if incremental:
-            # partition pruning: unchanged table_name partitions of raw
-            # are never even read
-            raw = raw.where(F.col("table_name").isin(changed))
+        snap = self._next_snapshot(collection, current)
+        out = self.snapshot_path(collection, snap)
+        if changed:
+            self._write_changed(collection, changed, winners, takedown, out)
+        os.makedirs(out, exist_ok=True)
+        written = self._partition_dirs(out)  # a zero-row winner drops out
+        tables = {
+            t: {"ingest_id": winners[t]["ingest_id"], "dir": written[t]}
+            for t in changed if t in written
+        }
+        old = self.snapshot_path(collection, current)
+        self._link(old, out, [e["dir"] for e in kept.values()])
+        catalog = self.refresh_metadata(
+            schema, snap, sorted(tables),
+            [r for r in self.metadata_rows(collection, current)
+             if r["table_name"] in kept],
+        )
+        tables.update(kept)
+        self._commit(
+            collection,
+            {"snapshot": snap, "tables": tables, "takedown_seq": td_seq},
+            current,
+        )
+        # every staged row carries its winner's description, and the
+        # catalog just written answers every queryable_columns probe,
+        # so the first page after this stage needs no probe job
+        for t in tables:
+            self._description_cache[(collection, t)] = (
+                snap, winners[t]["table_description"]
+            )
+            self._queryable_cache[(collection, t)] = (
+                snap, {r["column_name"] for r in catalog if r["table_name"] == t}
+            )
+        return sorted(tables)
+
+    def _write_changed(self, collection: str, changed: list[str],
+                       winners: dict, takedown: dict | None, out: str) -> None:
+        """Spark-write the winner rows of the *changed* tables, numbered
+        and less a pending takedown's rows, into snapshot dir *out*."""
+        # partition pruning: unchanged table_name partitions of raw
+        # are never even read
+        raw = self.read_raw(collection).where(F.col("table_name").isin(changed))
         # the winners ride into the plan as literals: a filter on their
         # ids plus id -> ingest_ts / description map lookups (joining a
         # frame built from a Python list would start a Python worker)
@@ -568,69 +646,53 @@ class Warehouse:
                       if c not in (ROW_UID, "table_description")]
         staged = with_row_uid(staged, order_cols)
 
-        tmp = out + "__staging_tmp"
-        staged.write.mode("overwrite").partitionBy("table_name").parquet(tmp)
+        staged.write.partitionBy("table_name").parquet(out)
 
-        new_tables = {t: dict(v) for t, v in prev.items()}
-        if incremental:
-            written = self._partition_dirs(tmp)
-            for t in changed:
-                entry = written.get(t)
-                dst = os.path.join(out, entry) if entry else None
-                old_entry = prev.get(t, {}).get("dir")
-                if entry is None:
-                    # winner has zero rows: drop the table from prod
-                    if old_entry and os.path.isdir(os.path.join(out, old_entry)):
-                        shutil.rmtree(os.path.join(out, old_entry))
-                    new_tables.pop(t, None)
-                    continue
-                if os.path.isdir(dst):
-                    # park the old partition INSIDE tmp, never beside
-                    # dst: a crash mid-swap must not leave a phantom
-                    # 'table_name=X__old' dir that partition discovery
-                    # would read as data — tmp is overwritten by the
-                    # next stage() and removed below, so leftovers
-                    # self-clean
-                    os.replace(dst, os.path.join(tmp, entry + "__old"))
-                    os.replace(os.path.join(tmp, entry), dst)
-                else:
-                    os.replace(os.path.join(tmp, entry), dst)
-                new_tables[t] = {
-                    "ingest_id": winners[t]["ingest_id"], "dir": entry,
-                }
-            for t in removed:
-                entry = prev.get(t, {}).get("dir")
-                if entry and os.path.isdir(os.path.join(out, entry)):
-                    shutil.rmtree(os.path.join(out, entry))
-                new_tables.pop(t, None)
-            shutil.rmtree(tmp)
-            # partition swaps happen under the root — bump its mtime
-            # explicitly so every snapshot-token cache self-invalidates
-            os.utime(out)
-        else:
-            if os.path.isdir(out):
-                shutil.rmtree(out)
-            os.replace(tmp, out)
-            new_tables = {
-                t: {"ingest_id": winners[t]["ingest_id"], "dir": entry}
-                for t, entry in self._partition_dirs(out).items()
-            }
-
-        self._invalidate_caches(collection)
-        self.refresh_metadata(
-            schema,
-            tables=changed if incremental else None,
-            removed=removed,
-        )
-        self._write_manifest(collection, new_tables, takedown_seq=td_seq)
-        # every staged row carries its winner's description, so the
-        # first page after this stage needs no probe job for it
-        token = self._snapshot_token(out)
-        for t in new_tables:
-            self._description_cache[(collection, t)] = (
-                token, winners[t]["table_description"]
-            )
-        return sorted(new_tables)
+    def _rewrite_raw(self, collection: str, rewrite) -> dict[str, tuple[int, int]]:
+        """Replace raw partitions one at a time with the frame
+        ``rewrite(table_name, partition_dir)`` returns (None: leave it
+        unread); returns {table_name: (files_before, files_after)}.
+        Each rewrite lands in full in a holding dir beside the raw root
+        and swaps in with two renames, the old partition parked INSIDE
+        the holding dir (beside the live ones, partition discovery
+        would read it as data). A rerun first moves back every parked
+        partition whose live dir is missing — after a crash between
+        the two renames it is the only copy."""
+        root = self.raw_path(collection)
+        hold = root + "__compact_tmp"
+        if os.path.isdir(hold):
+            if not os.path.isdir(root):
+                raise StagingError(
+                    f"'{collection}' raw root missing but {hold} exists — "
+                    "restore manually before rewriting"
+                )
+            for entry in os.listdir(hold):
+                live = os.path.join(root, entry.removesuffix("__old"))
+                if entry.endswith("__old") and not os.path.isdir(live):
+                    os.replace(os.path.join(hold, entry), live)
+            shutil.rmtree(hold)
+        if not self._exists(root):
+            raise StagingError(f"'{collection}' has no raw data")
+        report: dict[str, tuple[int, int]] = {}
+        for t, entry in sorted(self._partition_dirs(root).items()):
+            src = os.path.join(root, entry)
+            n_before = _n_files(src)
+            df = rewrite(t, src)
+            if df is None:
+                continue
+            tmp = os.path.join(hold, entry)
+            df.write.parquet(tmp)
+            if not _n_files(tmp):
+                # every row gone: AQE coalesces an empty frame to zero
+                # tasks → zero part files, which a later read of this
+                # partition dir cannot infer a schema from; force one
+                # empty part file carrying the schema
+                df.limit(0).repartition(1).write.mode("overwrite").parquet(tmp)
+            os.replace(src, os.path.join(hold, entry + "__old"))
+            os.replace(tmp, src)
+            report[t] = (n_before, _n_files(src))
+        shutil.rmtree(hold, ignore_errors=True)
+        return report
 
     def purge_rows(
         self,
@@ -648,52 +710,26 @@ class Warehouse:
         prod drops the bytes too, then clears the takedown segments.
 
         Idempotent (re-purging removes nothing), O(affected tables)
-        — untouched partitions are never read. Each rewrite lands
-        fully in a holding dir under system/ before the two-rename
-        swap (the stage() pattern; the holding dir lives OUTSIDE the
-        raw root so a crash can never leave a phantom
-        ``table_name=X__old`` dir that partition discovery would read
-        as data). Returns the tables actually rewritten."""
-        root = self.raw_path(collection)
-        if not self._exists(root):
+        — untouched partitions are never read; each partition swaps in
+        as :meth:`_rewrite_raw` describes. Returns the tables actually
+        rewritten."""
+        if not self._exists(self.raw_path(collection)):
             return []
-        part_dirs = self._partition_dirs(root)
-        hold = os.path.join(self.root, "system", collection, "purge_tmp")
-        shutil.rmtree(hold, ignore_errors=True)
-        os.makedirs(hold, exist_ok=True)
-        purged = []
-        for t in tables:
-            entry = part_dirs.get(t)
-            if entry is None:
-                continue
-            src = os.path.join(root, entry)
+
+        def survivors(t: str, src: str) -> DataFrame | None:
+            if t not in tables:
+                return None
             df = self.spark.read.parquet(src)
             if id_col not in df.columns or "ingest_id" not in df.columns:
-                continue
-            keep = df.join(
+                return None
+            return df.join(
                 retired,
                 (df[id_col] == retired[id_col])
                 & (df["ingest_id"] <= retired["__covers"]),
                 "left_anti",
             )
-            tmp = os.path.join(hold, entry)
-            keep.write.mode("overwrite").parquet(tmp)
-            if not any(f.endswith(".parquet") for f in os.listdir(tmp)):
-                # every row purged: AQE coalesces an empty frame to
-                # zero tasks → zero part files, which a later read of
-                # this partition dir cannot infer a schema from; force
-                # one empty part file carrying the schema
-                keep.limit(0).repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-            os.replace(src, os.path.join(hold, entry + "__old"))
-            os.replace(tmp, src)
-            purged.append(t)
-        shutil.rmtree(hold, ignore_errors=True)
-        if purged:
-            os.utime(root)
-            self._invalidate_caches(collection)
-        return purged
+
+        return sorted(self._rewrite_raw(collection, survivors))
 
     def compact(
         self, collection: str, target_files: int = 1,
@@ -725,146 +761,112 @@ class Warehouse:
         ``maxPartitionBytes``-sized splits. Compaction restores
         few-large-files layout without touching staging semantics.
 
-        Crash-safety mirrors stage(): each partition is rewritten into
-        a side tmp dir and swapped in with two renames (old parked
-        INSIDE tmp, so a crash never leaves a phantom dir that
-        partition discovery would read); partitions already at or
-        below the target are not even opened. Per-partition jobs make
-        the pass resumable — rerunning after a crash compacts only
-        what's left."""
+        Prod compaction commits a new snapshot as :meth:`stage` does,
+        rewriting the fragmented tables and hard-linking the other
+        tables and the catalog; raw partitions swap in one at a time
+        (:meth:`_rewrite_raw`). Partitions already at or below the
+        target are not even opened."""
         if target_files < 1:
             raise ValueError(f"target_files must be ≥ 1, got {target_files}")
         if which not in ("prod", "raw"):
             raise ValueError(f"which must be 'prod' or 'raw', got {which!r}")
-        out = getattr(self, f"{which}_path")(collection)
-        tmp = out + "__compact_tmp"
-        if os.path.isdir(tmp) and not os.path.isdir(out):
-            # the live root itself is gone: tmp may hold the only
-            # parked copies — refuse to clean it up
-            raise StagingError(
-                f"'{collection}' {which} root missing but {tmp} exists — "
-                "restore manually before compacting"
+        if which == "raw":
+            return self._rewrite_raw(
+                collection,
+                lambda t, src: (
+                    self.spark.read.parquet(src).coalesce(target_files)
+                    if _n_files(src) > target_files else None
+                ),
             )
-        if os.path.isdir(tmp):
-            # Unlike stage() — whose tmp holds data that regenerates
-            # from raw on the next call — a parked '__old' partition
-            # here IS the only copy if the previous run crashed between
-            # its two renames. Restore any whose live dir is missing
-            # BEFORE clearing tmp, or the rerun would destroy them.
-            for entry in os.listdir(tmp):
-                if entry.endswith("__old"):
-                    live = os.path.join(out, entry[: -len("__old")])
-                    if not os.path.isdir(live):
-                        os.replace(os.path.join(tmp, entry), live)
-            shutil.rmtree(tmp)
-            os.utime(out)
-            self._invalidate_caches(collection)
-        if not self._exists(out):
-            raise StagingError(
-                f"'{collection}' is not staged" if which == "prod"
-                else f"'{collection}' has no raw data"
-            )
-        report: dict[str, tuple[int, int]] = {}
-        for t, entry in sorted(self._partition_dirs(out).items()):
-            pdir = os.path.join(out, entry)
-            n_before = sum(
-                1 for f in os.listdir(pdir)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-            if n_before <= target_files:
-                continue
-            dst_tmp = os.path.join(tmp, entry)
+        manifest = self._read_manifest(collection) or {}
+        current = manifest.get("snapshot")
+        if current is None:
+            raise StagingError(f"'{collection}' is not staged")
+        old = self.snapshot_path(collection, current)
+        before = {e["dir"]: _n_files(os.path.join(old, e["dir"]))
+                  for e in manifest["tables"].values()}
+        frag = {t: e["dir"] for t, e in manifest["tables"].items()
+                if before[e["dir"]] > target_files}
+        if not frag:
+            return {}
+        snap = self._next_snapshot(collection, current)
+        out = self.snapshot_path(collection, snap)
+        report = {}
+        for t, entry in sorted(frag.items()):
             (
-                self.spark.read.parquet(pdir)
+                self.spark.read.parquet(os.path.join(old, entry))
                 .coalesce(target_files)
-                .write.mode("overwrite")
-                .parquet(dst_tmp)
+                .write.parquet(os.path.join(out, entry))
             )
-            os.replace(pdir, os.path.join(tmp, entry + "__old"))
-            os.replace(dst_tmp, pdir)
-            n_after = sum(
-                1 for f in os.listdir(pdir)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-            report[t] = (n_before, n_after)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        if report:
-            os.utime(out)
-            self._invalidate_caches(collection)
+            report[t] = (before[entry], _n_files(os.path.join(out, entry)))
+        self._link(
+            old, out,
+            [e for e in before if e not in frag.values()] + [_CATALOG_FILE],
+        )
+        self._commit(collection, dict(manifest, snapshot=snap), current)
         return report
 
     def refresh_metadata(
         self,
         schema: CollectionSchema,
-        tables: list[str] | None = None,
-        removed: list[str] | None = None,
-    ) -> list[str]:
-        """Rebuild the per-(table_name, column) catalog in ONE pass over
-        prod: count + approx-free exact distinct per column, collected
-        per table and unpivoted to long on the driver, keeping only
-        populated columns (all-null columns are absent → not
-        queryable, queens/etl/validation.py:218-220). The catalog is
-        written by the driver (see the module docstring).
-
-        With *tables* given, the stats pass scans ONLY those tables'
-        prod partitions (partition pruning) and merges into the
-        existing catalog on the driver — the per-table stats are an
-        independent groupBy(table_name) aggregate, so the merged
-        catalog is row-identical to a full rebuild. *removed* tables'
-        rows are dropped. This keeps stage() O(changed data) end to
-        end. Returns the catalogued table names."""
-        collection = schema.name
-        prod = self.read_prod(collection)
-        if tables is not None:
-            prod = prod.where(F.col("table_name").isin(list(tables)))
-        cols = [c for c in prod.columns
-                if c in schema.columns or c == ROW_UID]
-        aggs = []
-        for c in cols:
-            aggs.append(F.count(F.col(c)).alias(f"nn__{c}"))
-            aggs.append(F.countDistinct(F.col(c)).alias(f"nu__{c}"))
-        dtypes = {
-            c: schema.sql_type_of(c) if c in schema.columns else "INTEGER"
-            for c in cols
-        }
-        fresh = [
-            {
-                "data_collection": collection, "table_name": w["table_name"],
-                "column_name": c, "n_non_nulls": w[f"nn__{c}"],
-                "n_unique": w[f"nu__{c}"], "dtype": dtypes[c],
+        snap: int,
+        tables: list[str],
+        kept: list[dict],
+    ) -> list[dict]:
+        """Write the catalog of prod snapshot *snap* and return its
+        rows: the *kept* rows of the tables linked unchanged, plus
+        per-(table_name, column) stats of *tables* from ONE pass over
+        their partitions — count + exact distinct per column, unpivoted
+        to long on the driver, keeping only populated columns (all-null
+        columns are absent → not queryable,
+        queens/etl/validation.py:218-220). Stats are a per-table
+        groupBy, so the merged catalog equals a full rebuild. The read
+        goes through :meth:`read_prod`, so the first page of the new
+        snapshot finds its frame memoized."""
+        rows = list(kept)
+        if tables:
+            prod = self.read_prod(schema.name, snap).where(
+                F.col("table_name").isin(tables)
+            )
+            cols = [c for c in prod.columns
+                    if c in schema.columns or c == ROW_UID]
+            aggs = []
+            for c in cols:
+                aggs.append(F.count(F.col(c)).alias(f"nn__{c}"))
+                aggs.append(F.countDistinct(F.col(c)).alias(f"nu__{c}"))
+            dtypes = {
+                c: schema.sql_type_of(c) if c in schema.columns else "INTEGER"
+                for c in cols
             }
-            for w in prod.groupBy("table_name").agg(*aggs).collect()
-            for c in cols if w[f"nn__{c}"] > 0
-        ]
-        if tables is not None:
-            stale = set(tables) | set(removed or ())
-            fresh = [
-                r for r in self.metadata_rows(collection)
-                if r["table_name"] not in stale
-            ] + fresh
-        self._write_metadata(collection, fresh)
-        # the catalog just written answers every queryable_columns probe
-        token = self._snapshot_token(self.meta_path(collection))
-        by_table: dict[str, set[str]] = {}
-        for r in fresh:
-            by_table.setdefault(r["table_name"], set()).add(r["column_name"])
-        for t, names in by_table.items():
-            self._queryable_cache[(collection, t)] = (token, names)
-        return sorted(by_table)
+            rows += [
+                {
+                    "data_collection": schema.name,
+                    "table_name": w["table_name"],
+                    "column_name": c, "n_non_nulls": w[f"nn__{c}"],
+                    "n_unique": w[f"nu__{c}"], "dtype": dtypes[c],
+                }
+                for w in prod.groupBy("table_name").agg(*aggs).collect()
+                for c in cols if w[f"nn__{c}"] > 0
+            ]
+        _write_rows(self.snapshot_path(schema.name, snap), _CATALOG_FILE,
+                    rows, _META_ARROW)
+        return rows
 
-    def queryable_columns(self, collection: str, table_name: str) -> set[str]:
-        """Populated-column set for one staged table, memoized per
-        metadata snapshot so repeated pages never re-read the catalog."""
-        token = self._snapshot_token(self.meta_path(collection))
+    def queryable_columns(
+        self, collection: str, table_name: str, snap: int | None = None
+    ) -> set[str]:
+        """Populated-column set for one staged table of snapshot *snap*
+        (default: the committed one), memoized per snapshot so
+        repeated pages never re-read the catalog."""
+        snap = self.snapshot(collection) if snap is None else snap
         cached = self._queryable_cache.get((collection, table_name))
-        if cached is not None and cached[0] == token:
+        if cached is not None and cached[0] == snap:
             return cached[1]
         cols = {
-            r["column_name"] for r in self.metadata_rows(collection)
+            r["column_name"] for r in self.metadata_rows(collection, snap)
             if r["table_name"] == table_name
         }
-        self._queryable_cache[(collection, table_name)] = (token, cols)
+        self._queryable_cache[(collection, table_name)] = (snap, cols)
         return cols
 
     def table_description(self, collection: str, table_name: str) -> str | None:
@@ -874,16 +876,16 @@ class Warehouse:
         uncached LIMIT 1 scan per page is driver-bound). Read from prod
         rather than the ingest log so an ``as_of`` staging cutoff and
         the page body can never disagree."""
-        token = self._snapshot_token(self.prod_path(collection))
+        snap = self.snapshot(collection)
         cached = self._description_cache.get((collection, table_name))
-        if cached is not None and cached[0] == token:
+        if cached is not None and cached[0] == snap:
             return cached[1]
-        prod = self.read_prod(collection).where(
+        prod = self.read_prod(collection, snap).where(
             F.col("table_name") == table_name
         )
         desc = None
         if "table_description" in prod.columns:
             rows = prod.select("table_description").limit(1).collect()
             desc = rows[0][0] if rows else None
-        self._description_cache[(collection, table_name)] = (token, desc)
+        self._description_cache[(collection, table_name)] = (snap, desc)
         return desc

@@ -61,13 +61,15 @@ def test_compact_reduces_files_preserves_rows(spark, engine):
     engine.ingest(spark.createDataFrame(_rows(40, "b")), "dukes", "1.2",
                   ingest_ts=datetime(2024, 1, 2))
     engine.stage("dukes")
-    wh = engine.warehouse
-    prod = wh.prod_path("dukes")
-    dirs = wh._partition_dirs(prod)
+    prod = engine.warehouse.snapshot_path("dukes")
+    dirs = engine.warehouse._partition_dirs(prod)
     _fragment(os.path.join(prod, dirs["1.1"]), 5)
     _fragment(os.path.join(prod, dirs["1.2"]), 3)
-    os.utime(prod)  # what every real warehouse mutator does: bump the
-    # snapshot token so cached frames (stale file lists) invalidate
+    # a snapshot is immutable once committed, so the engine that staged
+    # it holds its file listing; a new one opens the fragmented layout,
+    # which stands for a stage that wrote many small files
+    engine = Engine(spark, engine.warehouse.root)
+    wh = engine.warehouse
     before = {t: _data_files(os.path.join(prod, d)) for t, d in dirs.items()}
     assert max(len(v) for v in before.values()) > 1, (
         "fixture must fragment at least one partition"
@@ -83,9 +85,13 @@ def test_compact_reduces_files_preserves_rows(spark, engine):
 
     rows_after = sorted(map(tuple, wh.read_prod("dukes").collect()))
     assert rows_after == rows_before  # row_uid included: byte-identical
+    live = wh.snapshot_path("dukes")
+    assert live != prod
     for t, d in dirs.items():
         if len(before[t]) > 1:
-            assert len(_data_files(os.path.join(prod, d))) == 1
+            assert len(_data_files(os.path.join(live, d))) == 1
+        # the replaced snapshot is left as it was
+        assert _data_files(os.path.join(prod, d)) == before[t]
 
     # queries still work over the compacted layout
     out = engine.query("dukes", "1.1", {"year": {"gte": 2020}})
@@ -101,17 +107,21 @@ def test_compact_skips_already_compact_partitions(spark, engine):
                   ingest_ts=datetime(2024, 1, 2))
     engine.stage("dukes")
     wh = engine.warehouse
-    prod = wh.prod_path("dukes")
-    dirs = wh._partition_dirs(prod)
-    small = os.path.join(prod, dirs["1.2"])
-    if len(_data_files(small)) == 1:
-        mtimes = {f: os.stat(os.path.join(small, f)).st_mtime_ns
-                  for f in _data_files(small)}
+
+    def small():
+        prod = wh.snapshot_path("dukes")
+        return os.path.join(prod, wh._partition_dirs(prod)["1.2"])
+
+    def state(part):
+        return {f: (os.stat(os.path.join(part, f)).st_mtime_ns,
+                    os.stat(os.path.join(part, f)).st_ino)
+                for f in _data_files(part)}
+
+    if len(_data_files(small())) == 1:
+        mtimes = state(small())
         report = wh.compact("dukes")
         assert "1.2" not in report
-        after = {f: os.stat(os.path.join(small, f)).st_mtime_ns
-                 for f in _data_files(small)}
-        assert after == mtimes  # untouched, not rewritten-in-place
+        assert state(small()) == mtimes  # untouched, not rewritten
     else:
         pytest.skip("tiny partition unexpectedly fragmented")
 
@@ -136,10 +146,9 @@ def test_compact_cli_surface(spark, engine, capsys):
     engine.ingest(spark.createDataFrame(_rows(60, "a")), "dukes", "1.1",
                   ingest_ts=datetime(2024, 1, 1))
     engine.stage("dukes")
-    prod = engine.warehouse.prod_path("dukes")
+    prod = engine.warehouse.snapshot_path("dukes")
     dirs = engine.warehouse._partition_dirs(prod)
     _fragment(os.path.join(prod, dirs["1.1"]), 4)
-    os.utime(prod)
     rc = cli.main([
         "--warehouse", engine.warehouse.root, "compact", "dukes",
     ])
@@ -148,31 +157,37 @@ def test_compact_cli_surface(spark, engine, capsys):
     assert out["compacted"]["1.1"] == {"files_before": 4, "files_after": 1}
 
 
-def test_compact_recovers_parked_partition_from_crashed_run(spark, engine):
-    """Crash window: the previous run parked a partition inside tmp
-    (first rename) and died before the second. A rerun must restore
-    it — NOT rmtree the only copy."""
-    import shutil
+def test_compact_crashed_before_flip_keeps_serving(spark, engine,
+                                                   monkeypatch):
+    """Crash window: a prod compact wrote its new snapshot and died
+    before the manifest flip. The committed snapshot keeps serving the
+    same rows, and a rerun compacts and clears the dead run's dir."""
+    from queens_spark.store.warehouse import Warehouse
 
     engine.ingest(spark.createDataFrame(_rows(40, "a")), "dukes", "1.1",
                   ingest_ts=datetime(2024, 1, 1))
     engine.stage("dukes")
-    wh = engine.warehouse
-    prod = wh.prod_path("dukes")
-    entry = wh._partition_dirs(prod)["1.1"]
+    live = engine.warehouse.snapshot_path("dukes")
+    _fragment(os.path.join(live, engine.warehouse._partition_dirs(live)["1.1"]), 4)
+    wh = Warehouse(spark, engine.warehouse.root)  # opens the fragments
+    snap = wh.snapshot("dukes")
     rows_before = sorted(map(tuple, wh.read_prod("dukes").collect()))
 
-    tmp = prod + "__compact_tmp"
-    os.makedirs(tmp)
-    os.replace(os.path.join(prod, entry), os.path.join(tmp, entry + "__old"))
-    os.utime(prod)
-    assert "1.1" not in wh._partition_dirs(prod)
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the flip")
 
-    wh.compact("dukes")  # rerun after the simulated crash
-    assert "1.1" in wh._partition_dirs(prod)
-    assert not os.path.isdir(tmp)
+    monkeypatch.setattr(Warehouse, "_write_manifest", crash)
+    with pytest.raises(RuntimeError):
+        wh.compact("dukes")
+    monkeypatch.undo()
+    dead = set(os.listdir(wh.prod_path("dukes"))) - {f"snap-{snap}"}
+    assert dead, "the crashed run left its snapshot dir behind"
+    assert wh.snapshot("dukes") == snap
     assert sorted(map(tuple, wh.read_prod("dukes").collect())) == rows_before
-    shutil  # noqa: B018 — imported for symmetry with other tests
+
+    assert wh.compact("dukes") == {"1.1": (4, 1)}  # the rerun
+    assert not dead & set(os.listdir(wh.prod_path("dukes")))
+    assert sorted(map(tuple, wh.read_prod("dukes").collect())) == rows_before
 
 
 @pytest.mark.slow

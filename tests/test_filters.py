@@ -6,6 +6,7 @@ FIXTURES.md §6 rejection matrix.
 
 import pytest
 
+from queens_spark.core.errors import InvalidValueTypeError
 from queens_spark.core.filters import (
     normalize_filters,
     to_nested,
@@ -85,6 +86,27 @@ def test_like_non_string_typeerror():
 def test_uncastable_value_typeerror():
     with pytest.raises(TypeError):
         validate_group({"year": {"eq": "twenty"}}, DUKES_SCHEMA)
+
+
+@pytest.mark.parametrize("val", [2020.5, -0.25, float("nan"), float("inf"),
+                                 "nan", "inf", "2020.5"])
+def test_fractional_or_non_finite_integer_rejected(val):
+    # truncating 2020.5 to 2020 would serve the 2020 rows
+    with pytest.raises(InvalidValueTypeError):
+        validate_group({"year": {"eq": val}}, DUKES_SCHEMA)
+
+
+def test_integral_float_casts_to_int():
+    out = validate_group({"year": {"lt": 2020.0}}, DUKES_SCHEMA)
+    assert out == {"year": {"lt": 2020}}
+    assert isinstance(out["year"]["lt"], int)
+
+
+@pytest.mark.parametrize("val", ["nan", "NaN", "inf", "-Infinity",
+                                 float("nan"), float("-inf")])
+def test_non_finite_real_rejected(val):
+    with pytest.raises(InvalidValueTypeError):
+        validate_group({"value": {"gt": val}}, DUKES_SCHEMA)
 
 
 def test_validate_filters_both_parts():

@@ -24,14 +24,25 @@ def _rows(tag: str, years=(2020, 2021), fuels=("Gas", "coal")):
     return rows
 
 
-def _file_state(part_dir: str) -> dict[str, tuple[int, int]]:
-    """name -> (size, mtime_ns) for every data file in a partition."""
-    return {
-        f: (os.stat(os.path.join(part_dir, f)).st_size,
-            os.stat(os.path.join(part_dir, f)).st_mtime_ns)
-        for f in os.listdir(part_dir)
-        if not f.startswith((".", "_"))
-    }
+def _file_state(part_dir: str) -> dict[str, tuple[int, int, int]]:
+    """name -> (size, mtime_ns, inode) for every data file in a
+    partition: an unchanged table's files are hard-linked into the next
+    snapshot, so even the inode stays the same."""
+    out = {}
+    for f in os.listdir(part_dir):
+        if not f.startswith((".", "_")):
+            st = os.stat(os.path.join(part_dir, f))
+            out[f] = (st.st_size, st.st_mtime_ns, st.st_ino)
+    return out
+
+
+def _live(engine, table: str) -> str:
+    """The partition dir of *table* in the committed snapshot. Resolve
+    it again after every stage: a path taken before a restage names
+    the previous snapshot."""
+    wh = engine.warehouse
+    prod = wh.snapshot_path("dukes")
+    return os.path.join(prod, wh._partition_dirs(prod)[table])
 
 
 @pytest.fixture()
@@ -47,11 +58,10 @@ def test_restage_leaves_unchanged_partitions_untouched(spark, engine):
                   ingest_ts=datetime(2024, 1, 2))
     assert engine.stage("dukes") == ["1.1", "1.2"]
 
-    prod = engine.warehouse.prod_path("dukes")
-    dirs = engine.warehouse._partition_dirs(prod)
-    assert set(dirs) == {"1.1", "1.2"}
-    before_a = _file_state(os.path.join(prod, dirs["1.1"]))
-    before_b = _file_state(os.path.join(prod, dirs["1.2"]))
+    prod = engine.warehouse.snapshot_path("dukes")
+    assert set(engine.warehouse._partition_dirs(prod)) == {"1.1", "1.2"}
+    before_a = _file_state(_live(engine, "1.1"))
+    before_b = _file_state(_live(engine, "1.2"))
     assert before_a and before_b
 
     # ingest a new version of ONLY table 1.2 and re-stage
@@ -59,8 +69,9 @@ def test_restage_leaves_unchanged_partitions_untouched(spark, engine):
                   ingest_ts=datetime(2024, 6, 1))
     assert engine.stage("dukes") == ["1.1", "1.2"]
 
-    after_a = _file_state(os.path.join(prod, dirs["1.1"]))
-    after_b = _file_state(os.path.join(prod, dirs["1.2"]))
+    assert engine.warehouse.snapshot_path("dukes") != prod
+    after_a = _file_state(_live(engine, "1.1"))
+    after_b = _file_state(_live(engine, "1.2"))
     assert after_a == before_a, "unchanged table's files were rewritten"
     assert after_b != before_b, "changed table's partition was not rewritten"
 
@@ -77,7 +88,10 @@ def test_restage_leaves_unchanged_partitions_untouched(spark, engine):
         (r["table_name"], r["column_name"]): (r["n_non_nulls"], r["n_unique"])
         for r in meta.collect()
     }
-    engine.warehouse.refresh_metadata(engine.schema_for("dukes"))  # full
+    # with no staged manifest the next stage rebuilds every table
+    os.remove(engine.warehouse.manifest_path("dukes"))
+    assert engine.stage("dukes") == ["1.1", "1.2"]
+    assert _file_state(_live(engine, "1.1")) != after_a
     full = {
         (r["table_name"], r["column_name"]): (r["n_non_nulls"], r["n_unique"])
         for r in engine.warehouse.read_metadata("dukes").collect()
@@ -89,12 +103,13 @@ def test_noop_restage_is_free_and_stable(spark, engine):
     engine.ingest(spark.createDataFrame(_rows("a1")), "dukes", "1.1",
                   ingest_ts=datetime(2024, 1, 1))
     engine.stage("dukes")
-    prod = engine.warehouse.prod_path("dukes")
-    dirs = engine.warehouse._partition_dirs(prod)
-    before = _file_state(os.path.join(prod, dirs["1.1"]))
-    # nothing new ingested: stage() must not rewrite anything
+    snap = engine.warehouse.snapshot("dukes")
+    before = _file_state(_live(engine, "1.1"))
+    # nothing new ingested: stage() must not rewrite anything, nor
+    # commit a new snapshot
     assert engine.stage("dukes") == ["1.1"]
-    assert _file_state(os.path.join(prod, dirs["1.1"])) == before
+    assert engine.warehouse.snapshot("dukes") == snap
+    assert _file_state(_live(engine, "1.1")) == before
 
 
 @pytest.mark.slow
@@ -106,14 +121,14 @@ def test_as_of_rollback_rewrites_only_rolled_table(spark, engine):
     engine.ingest(spark.createDataFrame(_rows("b2")), "dukes", "1.2",
                   ingest_ts=datetime(2024, 6, 1))
     engine.stage("dukes")
-    prod = engine.warehouse.prod_path("dukes")
-    dirs = engine.warehouse._partition_dirs(prod)
-    before_a = _file_state(os.path.join(prod, dirs["1.1"]))
+    snap = engine.warehouse.snapshot("dukes")
+    before_a = _file_state(_live(engine, "1.1"))
 
     # roll table 1.2 back to its January version; 1.1's winner is
     # unchanged so its files must survive byte-identical
     engine.stage("dukes", as_of=datetime(2024, 3, 1))
-    assert _file_state(os.path.join(prod, dirs["1.1"])) == before_a
+    assert engine.warehouse.snapshot("dukes") != snap
+    assert _file_state(_live(engine, "1.1")) == before_a
     labels_b = {r["label"] for r in engine.query("dukes", "1.2").collect()}
     assert all("b1" in l for l in labels_b)
 
@@ -126,7 +141,7 @@ def test_as_of_before_table_exists_removes_it(spark, engine):
     engine.stage("dukes")
     # cutoff before 1.2's first ingest: the table drops out of prod
     assert engine.stage("dukes", as_of=datetime(2024, 3, 1)) == ["1.1"]
-    prod = engine.warehouse.prod_path("dukes")
+    prod = engine.warehouse.snapshot_path("dukes")
     assert set(engine.warehouse._partition_dirs(prod)) == {"1.1"}
     with pytest.raises(KeyError):
         engine.query("dukes", "1.2")

@@ -182,18 +182,21 @@ def test_restage_then_page_serves_new_version(spark, engine):
 
 
 def test_compact_then_page_reads_the_new_files(spark, engine, tmp_path):
-    # compaction rewrites prod's files and leaves the catalog alone:
-    # only the prod token tells the memo that its file listing is gone
+    # compaction commits a new snapshot with the same catalog rows:
+    # only the snapshot id tells the memo that its file listing is gone.
+    # A committed snapshot is immutable, so the stage's own engine holds
+    # its listing; a new engine opens the fragments, which stand for a
+    # stage that wrote many small files.
     import os
     import shutil
 
-    prod = engine.warehouse.prod_path("dukes")
+    prod = engine.warehouse.snapshot_path("dukes")
     part = os.path.join(prod, "table_name=1.1")
     frag = str(tmp_path / "frag")
     spark.read.parquet(part).repartition(3).write.parquet(frag)
     shutil.rmtree(part)
     shutil.move(frag, part)
-    os.utime(prod)
+    engine = Engine(spark, engine.warehouse.root)
     f = {"year": {"gte": 2021}}
     before, _ = engine.query_page("dukes", "1.1", f, limit=5000)
     assert engine.compact("dukes") == {"1.1": (3, 1)}

@@ -117,13 +117,22 @@ def test_retire_reaches_query_stage_and_maintain(engine):
 
     # 2. stage(): prod physically drops the rows; the untouched
     # table's partition bytes stay identical (incrementality survives)
-    prod = eng.warehouse.prod_path("docs")
-    t1_dir = os.path.join(prod, "table_name=t1")
-    before = sorted(os.listdir(t1_dir))
-    before_mtime = os.stat(t1_dir).st_mtime_ns
+    def t1_files():
+        # resolved after each stage: a path taken before it names the
+        # previous snapshot
+        t1_dir = os.path.join(eng.warehouse.snapshot_path("docs"),
+                              "table_name=t1")
+        return {
+            f: (st.st_size, st.st_mtime_ns, st.st_ino)
+            for f in os.listdir(t1_dir)
+            for st in [os.stat(os.path.join(t1_dir, f))]
+        }
+
+    before = t1_files()
+    snap = eng.warehouse.snapshot("docs")
     eng.stage("docs")
-    assert sorted(os.listdir(t1_dir)) == before
-    assert os.stat(t1_dir).st_mtime_ns == before_mtime
+    assert eng.warehouse.snapshot("docs") != snap
+    assert t1_files() == before
     prod_ids = sorted(
         r["doc_id"]
         for r in eng.warehouse.read_prod("docs")
@@ -426,7 +435,7 @@ def test_fully_retired_table_purges_to_empty(spark, engine):
     import os
 
     assert not os.path.isdir(
-        os.path.join(eng.warehouse.prod_path("docs"), "table_name=t0")
+        os.path.join(eng.warehouse.snapshot_path("docs"), "table_name=t0")
     )
     assert _served_ids(eng, "t1") == list(range(10, 16))
     rep = eng.maintain("docs")
